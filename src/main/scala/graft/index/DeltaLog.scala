@@ -76,27 +76,30 @@ object DeltaLog {
     * consume each other's temp file — with a shared name, the loser's
     * fallback would DELETE the destination and then fail its rename.
     */
-  /** Fully reads a small meta/marker file, retrying ONCE on a transient
-    * ChecksumException: the file:-scheme [[writeAtomicString]] deletes
-    * the stale `.crc` sidecar and ATOMIC_MOVEs the data as two separate
-    * steps, so a ChecksumFileSystem reader that opened the old crc just
-    * before the delete can verify NEW bytes against the OLD checksum
-    * exactly once — the retry re-opens with the post-move state (crc
-    * absent → raw read). Every small-file reader in the index/ops layer
-    * goes through here.
+  /** Fully reads a small meta/marker file to EOF of the stream it opened,
+    * retrying ONCE on a transient ChecksumException or EOFException: the
+    * file:-scheme [[writeAtomicString]] deletes the stale `.crc` sidecar
+    * and ATOMIC_MOVEs the data as two separate steps, so a
+    * ChecksumFileSystem reader that opened the old crc just before the
+    * delete can verify NEW bytes against the OLD checksum exactly once —
+    * the retry re-opens with the post-move state (crc absent → raw read).
+    * The length comes from the open stream, not from a separate stat: a
+    * stat taken beside the open can describe the other side of a replace
+    * (and costs one more filesystem call per read). Every small-file
+    * reader in the index/ops layer goes through here.
     */
   private[graft] def readSmallBytes(
       f: FileSystem, p: Path): Array[Byte] = {
     def once(): Array[Byte] = {
       val in = f.open(p)
-      try {
-        val bytes = new Array[Byte](f.getFileStatus(p).getLen.toInt)
-        in.readFully(bytes)
-        bytes
-      } finally in.close()
+      try in.readAllBytes()
+      finally in.close()
     }
     try once()
-    catch { case _: org.apache.hadoop.fs.ChecksumException => once() }
+    catch {
+      case _: org.apache.hadoop.fs.ChecksumException |
+          _: java.io.EOFException => once()
+    }
   }
 
   private[graft] def writeAtomicString(

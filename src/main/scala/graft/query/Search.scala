@@ -230,6 +230,9 @@ object Search {
     * when fewer than k match). The reference pads in HashMap iteration
     * order — nondeterministic — so the rebuild pads deterministically by
     * docId asc (COVERAGE.md divergence #3). Default off = served semantics.
+    *
+    * The same rows as a `(url, score, docId)` frame — a thin wrapper over
+    * [[searchTopRows]], so both share one code path.
     */
   def searchTop(
       spark: SparkSession,
@@ -240,6 +243,24 @@ object Search {
       useWand: Boolean = true,
       params: Scoring.Params = Scoring.Params(),
       padToK: Boolean = false): DataFrame = {
+    import spark.implicits._
+    spark.createDataset(searchTopRows(spark, indexDir, query, method, k,
+      useWand, params, padToK).toSeq).toDF("url", "score", "docId")
+  }
+
+  /** [[searchTop]]'s rows as a driver array `(url, score, docId)`, in rank
+    * order. The serving path uses this directly: building and collecting a
+    * Catalyst frame of ≤ k driver rows costs more than a cached search.
+    */
+  def searchTopRows(
+      spark: SparkSession,
+      indexDir: String,
+      query: String,
+      method: Method,
+      k: Int,
+      useWand: Boolean = true,
+      params: Scoring.Params = Scoring.Params(),
+      padToK: Boolean = false): Array[(String, Float, Long)] = {
     import spark.implicits._
     val h = IndexHandles(spark, indexDir)
     val qp = plan(spark, h, query, method, params)
@@ -280,13 +301,10 @@ object Search {
         .as[(Long, Float)]
         .collect()
     }
-    if (top.isEmpty)
-      return spark.emptyDataset[(String, Float, Long)]
-        .toDF("url", "score", "docId")
+    if (top.isEmpty) return Array.empty
     val urls = h.urlsFor(top.map(_._1).toSeq)
-    val out = top.map { case (docId, score) =>
+    top.map { case (docId, score) =>
       (urls.getOrElse(docId, ""), score, docId)
-    }.toSeq
-    spark.createDataset(out).toDF("url", "score", "docId")
+    }
   }
 }

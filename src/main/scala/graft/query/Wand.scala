@@ -92,14 +92,18 @@ object Wand {
 
     /** Upper bound of THIS cursor's current block (0 when exhausted) —
       * the block-max re-check that lets aligned candidates be skipped
-      * without decoding (Ding & Suel block-max WAND).
+      * without decoding (Ding & Suel block-max WAND). Clamped at 0 like
+      * [[termUb]]: the skip moves past every doc up to the block end, and
+      * docs there that LACK a negative-idf term do not pay its negative
+      * bound, so a negative summand would let the skip drop docs above θ.
       */
     private var ubBi = -1
     private var ubVal = 0.0f
     def curBlockUb: Float = {
       if (bi >= blocks.length) return 0.0f
       if (ubBi != bi) {
-        ubVal = blockUpperBound(blocks(bi), weight, idf, avgdl, method, p)
+        ubVal = math.max(0.0f,
+          blockUpperBound(blocks(bi), weight, idf, avgdl, method, p))
         ubBi = bi
       }
       ubVal

@@ -90,7 +90,7 @@ object ExplainAudit {
     def assertNoGlobalSort(name: String, df: org.apache.spark.sql.DataFrame)
         : Unit = {
       val plan = df.queryExecution.executedPlan.toString
-      val strayExchange = "Exchange [a-z]+".r.findAllIn(plan)
+      val strayExchange = "Exchange \\S+".r.findAllIn(plan)
         .filterNot(_.startsWith("Exchange hashpartitioning")).toSeq
       val bad = strayExchange ++ Seq("Sort ").filter(plan.contains) ++
         "Exchange hashpartitioning\\((?!doc_id)".r.findFirstIn(plan)

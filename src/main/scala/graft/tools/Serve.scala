@@ -1,6 +1,7 @@
 package graft.tools
 
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.{LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
@@ -140,16 +141,36 @@ object Serve {
     // re-listing on EVERY /file request — bound it to one per window
     val lastReload = new java.util.concurrent.atomic.AtomicLong(0L)
 
+    // TCP_NODELAY on accepted sockets: without it a small response body
+    // waits behind the client's delayed ACK (~40 ms per request). The JDK
+    // reads this property ONCE, when its server config class loads (the
+    // first HttpServer.create in the JVM), so it is set here, before that,
+    // and only if the user has not set it.
+    if (System.getProperty("sun.net.httpserver.nodelay") == null)
+      System.setProperty("sun.net.httpserver.nodelay", "true")
     val server = HttpServer.create(new java.net.InetSocketAddress(port), 0)
+    // requests run concurrently (IndexHandles is safe for that: TrieMap
+    // caches, per-directory swap lock) instead of one at a time on the
+    // dispatcher thread. Daemon threads let the JVM exit; the core time-out
+    // lets idle pools of servers started and dropped wind down.
+    val threads = Runtime.getRuntime.availableProcessors
+    val workers = new ThreadPoolExecutor(threads, threads, 60L,
+      TimeUnit.SECONDS, new LinkedBlockingQueue[Runnable](),
+      (r: Runnable) => {
+        val t = new Thread(r, "graft-serve")
+        t.setDaemon(true)
+        t
+      })
+    workers.allowCoreThreadTimeOut(true)
+    server.setExecutor(workers)
 
     server.createContext("/api/search", (ex: HttpExchange) =>
       try {
         if (ex.getRequestMethod != "POST") respond(ex, 405, """"POST only"""")
         else {
           val query = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-          val rows = Search.searchTop(spark, indexDir, query, method, 10)
-            .select("url", "score").as[(String, Float)].collect()
-          val json = rows.map { case (u, s) => s"""["${esc(u)}",$s]""" }
+          val rows = Search.searchTopRows(spark, indexDir, query, method, 10)
+          val json = rows.map { case (u, s, _) => s"""["${esc(u)}",$s]""" }
             .mkString("[", ",", "]")
           respond(ex, 200, json)
         }

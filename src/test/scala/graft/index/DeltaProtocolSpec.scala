@@ -287,4 +287,49 @@ class DeltaProtocolSpec extends AnyFunSuite {
     assert(errors.isEmpty, s"${errors.size} failed: ${errors.peek()}")
     assert(reads.get() > 100, s"only ${reads.get()} reads completed")
   }
+
+  test("readSmallBytes racing writeAtomicString replacements returns one " +
+      "whole version every time, never truncated or over-long bytes") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_smallread_").toString
+    val path = s"$dir/meta.json"
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // two versions of very different lengths: a length taken apart from
+    // the open stream would cut the long one or overrun the short one
+    val long = "{\"rev\":\"" + ("L" * 4000) + "\"}"
+    val short = "{\"rev\":\"s\"}"
+    DeltaLog.writeAtomicString(fs, path, long)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val reads = new java.util.concurrent.atomic.AtomicLong(0L)
+    val readers = (1 to 2).map { w =>
+      val t = new Thread(() => {
+        while (!stop.get() && errors.size() < 5) {
+          try {
+            val s = new String(DeltaLog.readSmallBytes(fs, p),
+              StandardCharsets.UTF_8)
+            if (s != long && s != short)
+              errors.add(s"reader $w: ${s.length} chars '${s.take(20)}…'")
+            reads.incrementAndGet()
+          } catch {
+            case e: Exception => errors.add(s"reader $w: $e")
+          }
+        }
+      })
+      t.setDaemon(true); t.start(); t
+    }
+    try {
+      var r = 1
+      while (r <= 3000 && errors.isEmpty) {
+        DeltaLog.writeAtomicString(fs, path, if (r % 2 == 0) long else short)
+        r += 1
+      }
+    } finally {
+      stop.set(true)
+      readers.foreach(_.join(10000))
+    }
+    assert(errors.isEmpty, s"${errors.size} failed: ${errors.peek()}")
+    assert(reads.get() > 100, s"only ${reads.get()} reads completed")
+  }
 }

@@ -91,6 +91,63 @@ class IndexEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       engineTop(q, Search.Bm25, useWand = false, k = 1000))
   }
 
+  test("searchTopRows ≡ searchTop(...).collect() row for row (bm25/tfidf " +
+      "× WAND/naive × padToK, empty query, no-match query)") {
+    val queries = Seq("texture array shader", "42 . data", "opengl", "",
+      "missingkeywordthatdoesnotexist")
+    for {
+      q <- queries
+      m <- Seq(Search.Bm25, Search.Tfidf)
+      useWand <- Seq(true, false)
+      padToK <- Seq(false, true)
+    } {
+      val k = if (padToK) 20 else 10
+      val rows = Search.searchTopRows(spark, indexDir, q, m, k,
+        useWand = useWand, padToK = padToK).toVector
+      val frame = Search.searchTop(spark, indexDir, q, m, k,
+        useWand = useWand, padToK = padToK)
+      assert(frame.columns.toSeq == Seq("url", "score", "docId"))
+      val collected = frame.as[(String, Float, Long)].collect().toVector
+      assert(rows == collected,
+        s"[$m wand=$useWand pad=$padToK] \"$q\"")
+      if (q.isEmpty || q.startsWith("missing"))
+        assert(rows.isEmpty == !padToK, s"[$m pad=$padToK] \"$q\"")
+    }
+  }
+
+  test("WAND ≡ naive when a head term (negative BM25 idf) meets positive " +
+      "terms across many blocks (block-max skip clamps negative bounds)") {
+    // "common" is in 6 of 7 docs → df > (N+1)/2 → negative bm25 idf; the
+    // positive terms fall in docs with and without it, and 16-posting
+    // blocks give every term many blocks, so aligned groups of the head
+    // cursor and a positive cursor hit the block-max re-check often
+    val ts = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
+    val pages = (0 until 700).map { i =>
+      val words = Seq.newBuilder[String]
+      if (i % 7 != 0) words ++= Seq.fill(1 + i % 3)("common")
+      if (i % 3 == 0) words ++= Seq.fill(1 + (i * 31) % 5)("alpha")
+      if (i % 5 == 0) words ++= Seq.fill(1 + (i * 13) % 4)("bravo")
+      words ++= (0 until (i * 17) % 11).map(j => s"pad${(i + j) % 40}x")
+      Schema.Page(f"/head/doc$i%04d", ts, null,
+        words.result().mkString(" "), "en")
+    }
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_headwand_").toString
+    IndexBuilder.build(spark, spark.createDataset(pages).toDF(), dir,
+      IndexBuilder.BuildConf(partitions = 4, postingGroups = 2,
+        queryBuckets = 4, blockSize = 16))
+    for {
+      q <- Seq("common alpha", "common bravo", "common alpha bravo")
+      k <- Seq(5, 10, 40)
+    } {
+      def top(useWand: Boolean) = Search.searchTopRows(spark, dir, q,
+        Search.Bm25, k, useWand = useWand).toVector
+      val naive = top(useWand = false)
+      assert(naive.size >= 5, s"\"$q\": only ${naive.size} positive")
+      assert(top(useWand = true) == naive, s"\"$q\" k=$k")
+    }
+  }
+
   test("CLI semantics (padToK): top-k of the FULL scored list — " +
       "negative-idf matches keep real scores BELOW the zeros, " +
       "never forged to 0.0 (main.rs:290 ranks every doc)") {
