@@ -19,11 +19,12 @@ import org.apache.spark.sql.types._
   * codegen: primitive byte[] access, a flat double[] lookup, no row
   * materialization.
   *
-  * Semantics match the closure it replaced exactly: evaluation is the
-  * same j-ascending sequential fold (bit-identical sums), only the first
-  * min(code.length, m) bytes are read, and a code byte ≥ ksub (corrupt
-  * index) yields NULL — callers drop those rows, mirroring the former
-  * explicit bounds-check-and-skip.
+  * On valid codes the semantics match the closure it replaced exactly:
+  * evaluation is the same j-ascending sequential fold (bit-identical
+  * sums), and only the first min(code.length, m) bytes are read. A code
+  * byte ≥ ksub (corrupt index) yields NULL and callers drop the row: a
+  * deliberate change from the closure, which %-wrapped such a byte into
+  * a valid but wrong slot and scored the row anyway.
   */
 case class AdcScore(child: Expression, table: Array[Double], ksub: Int)
     extends UnaryExpression with ExpectsInputTypes {

@@ -310,24 +310,24 @@ object DeltaLog {
       .select("termId", "docId", "tf", "docLen")
   }
 
-  /** Tombstone row count for a (dir, seqs) snapshot, from parquet
-    * footers. Memoized per seq dir KEYED ON ITS FILE STATUSES
-    * (path+length+mtime): a committed seq's `removed/` files are
-    * immutable and seqs are never reused ([[nextSeq]] floors at
-    * [[compactedThrough]]), so repeated view constructions over the same
-    * snapshot — every postingsView/docsView during an update or
+  /** Row count of the parquet files directly under each of `paths` (a
+    * missing path counts 0), from their footers — no Spark job. Memoized
+    * per dir KEYED ON ITS FILE STATUSES (path+length+mtime): a committed
+    * seq's files are immutable and seqs are never reused ([[nextSeq]]
+    * floors at [[compactedThrough]]), so repeated view constructions over
+    * the same snapshot — every postingsView/docsView during an update or
     * compaction — skip the per-file footer opens, while a
     * rebuilt-in-place dir (tests) changes the key and misses rather than
     * serving a stale count. The listStatus itself stays per-call: one
     * cheap RPC, vs a footer open per file.
     */
-  private val tombRowsMemo =
+  private val rowsMemo =
     scala.collection.concurrent.TrieMap.empty[String, Long]
 
-  private[graft] def tombRowCount(
-      spark: SparkSession, dir: String, seqs: Seq[Int]): Long = {
+  private[graft] def parquetRows(
+      spark: SparkSession, paths: Seq[String]): Long = {
     val hconf = spark.sparkContext.hadoopConfiguration
-    def rowsUnder(path: String): Long = {
+    paths.map { path =>
       val p = new Path(path)
       val f = p.getFileSystem(hconf)
       if (!f.exists(p)) 0L
@@ -337,18 +337,21 @@ object DeltaLog {
         val key = sts.map(st =>
           s"${st.getPath}|${st.getLen}|${st.getModificationTime}")
           .mkString(";")
-        if (tombRowsMemo.size > 1024) tombRowsMemo.clear() // rebuildable
-        tombRowsMemo.getOrElseUpdate(key,
+        if (rowsMemo.size > 1024) rowsMemo.clear() // rebuildable
+        rowsMemo.getOrElseUpdate(key,
           sts.map(IndexBuilder.footerRowCount(_, hconf)).sum)
       }
-    }
+    }.sum
+  }
+
+  /** Tombstone row count for a (dir, seqs) snapshot ([[parquetRows]]). */
+  private[graft] def tombRowCount(
+      spark: SparkSession, dir: String, seqs: Seq[Int]): Long =
     // removed/ + docs/: [[tombstonesDf]] derives an add-tombstone per doc
     // row, so the liveness working set the overflow gates bound includes
     // both sides
-    seqs.map(s =>
-      rowsUnder(removedPath(dir, s)) +
-        rowsUnder(s"${seqPath(dir, s)}/docs")).sum
-  }
+    parquetRows(spark, seqs.flatMap(s =>
+      Seq(removedPath(dir, s), s"${seqPath(dir, s)}/docs")))
 
   /** Tombstone working-set cap for driver collects/broadcasts — THE single
     * definition shared by the query handles ([[graft.query.IndexHandles]]

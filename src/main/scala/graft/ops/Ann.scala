@@ -846,9 +846,12 @@ object Ann {
         // Dataset (de)serialization. The per-sub centroid count is
         // uniform by construction (every subspace trains with the same
         // kk = min(ksub, sampleSize)), so one stride addresses the table.
-        // Corrupt code bytes (≥ stride) yield NULL and are dropped —
-        // the same bounds-check-and-skip policy as before, never a
-        // %-wrap into a valid-but-wrong slot.
+        // Corrupt code bytes (≥ stride) yield NULL and the row is
+        // dropped. This deliberately changes the replaced closure, which
+        // %-wrapped such a byte into a valid but wrong slot and scored the
+        // row; valid codes score exactly as before. `books` is non-empty
+        // here: an index trained from an empty embeddings table has no
+        // codebooks and returned the empty top-k above.
         val bounds = subBounds(qUnit.length, books.length)
         val stride = books(0).length
         val flat = new Array[Double](books.length * stride)

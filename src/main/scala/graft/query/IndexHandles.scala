@@ -3,12 +3,12 @@ package graft.query
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.index.{DeltaLog, IndexBuilder}
-import graft.index.Schema.Stats
+import graft.index.Schema.{Stats, TermBlock}
 
 /** Hot query-side state of one index: meta + stats are collected once;
   * the dictionary and docs tables are persisted in memory (they're the
@@ -22,7 +22,8 @@ import graft.index.Schema.Stats
   */
 final class IndexHandles private (
     val spark: SparkSession,
-    val indexDir: String) {
+    val indexDir: String,
+    urlCacheCap: Int = 100000) {
 
   val meta: Map[String, String] = IndexBuilder.readMeta(spark, indexDir)
   val postingGroups: Int = meta("postingGroups").toInt
@@ -224,113 +225,160 @@ final class IndexHandles private (
         salted(df.coalesce(1)).persist(StorageLevel.MEMORY_AND_DISK)
       else df)
 
-  /** Candidate blocks across base + delta layers, with a `_seq` layer
-    * column (base = 0). Base is group- and termId-pruned at the parquet
-    * layer; delta layers (small) are termId-pruned. Tombstones are NOT
-    * applied here — the WAND decode filter handles per-row liveness using
-    * [[tombMap]] (block-max bounds stay safe upper bounds under deletes).
+  /** Layered blocks as typed `(_seq, TermBlock)` rows (`_seq` = 0 for
+    * the base, the delta seq otherwise): the one projection every block
+    * reader uses — the per-term driver fetch, the whole-index fill, the
+    * distributed WAND paths and the profiling tools. `termIds = None`
+    * reads every block of every layer; otherwise the base is group- and
+    * termId-pruned at the parquet layer and the (small) delta layers are
+    * termId-pruned. Tombstones are NOT applied here — the WAND decode
+    * filter handles per-row liveness using [[tombMap]] (block-max bounds
+    * stay safe upper bounds under deletes).
     */
-  def blocksFor(termIds: Seq[Long]): DataFrame = {
-    val base = pruned(blocksDf, termIds)
+  def layeredBlocks(termIds: Option[Seq[Long]]): Dataset[(Int, TermBlock)] = {
+    import spark.implicits._
+    val base = termIds.fold(blocksDf)(pruned(blocksDf, _))
       .drop("group").withColumn("_seq", lit(0))
-    deltaBlocksDf match {
+    val layered = deltaBlocksDf match {
       case None => base
       case Some(d) =>
-        val delta = d.filter(col("termId").isin(termIds: _*))
-          .withColumn("_seq", col("seq").cast("int")).drop("seq")
-        base.unionByName(delta)
+        base.unionByName(
+          termIds.fold(d)(ids => d.filter(col("termId").isin(ids: _*)))
+            .withColumn("_seq", col("seq").cast("int")).drop("seq"))
     }
+    layered.select(col("_seq").cast("int").as("_1"),
+        struct(Encoders.product[TermBlock].schema.fieldNames.map(col): _*)
+          .as("_2"))
+      .as[(Int, TermBlock)]
   }
 
   /** Serving-node block cache: collected candidate blocks per termId, for
     * the driver-local WAND path. The reference engine holds its ENTIRE
-    * index in process memory; the rebuild's analog is this bounded hot-term
-    * cache — repeat terms skip the Spark collect entirely (0 jobs), cold
-    * terms pay one pruned scan. Capacity is bounded in POSTINGS
-    * (`graft.driverBlockCachePostings`, default 8M ≈ ~30 MB encoded);
-    * inserts past the cap evict oldest-first. Per-handle, so every index
-    * version (delta commit / rebuild) starts clean.
+    * index in process memory; the rebuild's analog is this cache, bounded
+    * in POSTINGS (`graft.driverBlockCachePostings`, default 8M ≈ ~30 MB
+    * encoded). Per-handle, so every index version (delta commit /
+    * rebuild) starts clean.
+    *
+    * Working-set rule, chosen by index size: when every STORED posting
+    * of this version (base and delta layers, replaced docs' dead ones
+    * included) fits both the cap and [[IndexHandles.FillMaxPostings]], the
+    * handle's first miss fills the cache with every block of every layer
+    * (one Spark job, once per handle and index version, even when
+    * concurrent queries miss together) and marks it complete — every later
+    * search on this version fetches nothing, and a termId missing from the
+    * complete cache has no blocks. Otherwise a miss fetches just the
+    * missing terms (one pruned scan) and inserts past the cap evict
+    * oldest-first.
     */
   private val blockCacheCap: Long = spark.conf
     .getOption("graft.driverBlockCachePostings").map(_.toLong)
     .getOrElse(8000000L)
   private val blockCache =
-    TrieMap.empty[Long, Array[(Int, graft.index.Schema.TermBlock)]]
+    TrieMap.empty[Long, Array[(Int, TermBlock)]]
   private val blockCacheOrder =
     new java.util.concurrent.ConcurrentLinkedQueue[Long]()
   private val blockCachePostings =
     new java.util.concurrent.atomic.AtomicLong(0L)
+  private val fillPostings: Long =
+    math.min(blockCacheCap, IndexHandles.FillMaxPostings)
+
+  /** Every posting the fill would hold, from parquet footers (no Spark
+    * job): base groups plus delta layers, dead postings of replaced docs
+    * included until compaction drops them.
+    */
+  private def storedPostings(): Long = DeltaLog.parquetRows(spark,
+    (0 until postingGroups)
+      .map(g => s"${IndexBuilder.postingsPath(indexDir)}/group=$g") ++
+      deltaSeqs.map(s => s"${DeltaLog.seqPath(indexDir, s)}/postings"))
+
+  private def cacheBlocksOf(t: Long, bs: Array[(Int, TermBlock)]): Unit =
+    // putIfAbsent: a concurrent query may have inserted t already —
+    // counting both inserts would inflate the postings counter forever
+    // (evictions subtract each term once), silently shrinking the
+    // effective cache toward zero
+    if (blockCache.putIfAbsent(t, bs).isEmpty) {
+      blockCachePostings.addAndGet(bs.iterator.map(_._2.n.toLong).sum)
+      blockCacheOrder.add(t)
+    }
+
+  // decided, and filled, by the first miss; the live count (a lower bound
+  // of the stored one) spares the footer reads on a big index
+  private val blocksFilled = new IndexHandles.Once({
+    val fits = meta("postingCount").toLong <= fillPostings &&
+      storedPostings() <= fillPostings
+    if (fits) layeredBlocks(None).collect().groupBy(_._2.termId)
+      .foreach { case (t, bs) => cacheBlocksOf(t, bs) }
+    fits
+  })
 
   /** Layered candidate blocks of `termIds`, collected (driver-local WAND
-    * input), served from the bounded hot-term cache where possible.
+    * input), served from the block cache where possible.
     */
-  def candidateBlocks(
-      termIds: Seq[Long]): Array[(Int, graft.index.Schema.TermBlock)] = {
-    import spark.implicits._
+  def candidateBlocks(termIds: Seq[Long]): Array[(Int, TermBlock)] = {
     // read hit ARRAYS first, not just membership: an eviction between a
     // contains() check and the later read (by this query's own insert
     // pass, or any concurrent query) would silently drop a term's blocks
     // from the query — a wrong-top-k bug, not a slow path
-    val hitArrays: Map[Long, Array[(Int, graft.index.Schema.TermBlock)]] =
+    val hitArrays: Map[Long, Array[(Int, TermBlock)]] =
       termIds.iterator.flatMap(t => blockCache.get(t).map(t -> _)).toMap
     val misses = termIds.filterNot(hitArrays.contains)
-    val fetched: Array[(Int, graft.index.Schema.TermBlock)] =
+    val fetched: Array[(Int, TermBlock)] =
       if (misses.isEmpty) Array.empty
-      else blocksFor(misses)
-        .select(col("_seq").cast("int").as("_1"),
-          struct(col("termId"), col("bucket"), col("minDocId"),
-            col("maxDocId"), col("n"), col("minTf"), col("maxTf"),
-            col("minDocLen"), col("maxDocLen"), col("docIdsDelta"),
-            col("tfs"), col("docLens")).as("_2"))
-        .as[(Int, graft.index.Schema.TermBlock)]
-        .collect()
-    if (misses.nonEmpty) {
-      val byTerm = fetched.groupBy(_._2.termId)
-      misses.foreach { t =>
-        val bs = byTerm.getOrElse(t, Array.empty)
-        // putIfAbsent: a concurrent query may have inserted t already —
-        // counting both inserts would inflate the postings counter
-        // forever (evictions subtract each term once), silently shrinking
-        // the effective cache toward zero
-        if (blockCache.putIfAbsent(t, bs).isEmpty) {
-          blockCachePostings.addAndGet(bs.iterator.map(_._2.n.toLong).sum)
-          blockCacheOrder.add(t)
+      else if (blocksFilled.get) {
+        misses.iterator.flatMap(t => blockCache.getOrElse(t, Array.empty))
+          .toArray
+      } else {
+        val f = layeredBlocks(Some(misses)).collect()
+        val byTerm = f.groupBy(_._2.termId)
+        misses.foreach(t => cacheBlocksOf(t, byTerm.getOrElse(t, Array.empty)))
+        while (blockCachePostings.get() > blockCacheCap &&
+            !blockCacheOrder.isEmpty) {
+          val old = blockCacheOrder.poll()
+          blockCache.remove(old).foreach(bs =>
+            blockCachePostings.addAndGet(-bs.iterator.map(_._2.n.toLong).sum))
         }
+        f
       }
-      while (blockCachePostings.get() > blockCacheCap &&
-          !blockCacheOrder.isEmpty) {
-        val old = blockCacheOrder.poll()
-        blockCache.remove(old).foreach(bs =>
-          blockCachePostings.addAndGet(-bs.iterator.map(_._2.n.toLong).sum))
-      }
-    }
     termIds.iterator.flatMap(t => hitArrays.getOrElse(t, Array.empty))
       .toArray ++ fetched
   }
 
-  /** Bounded docId → url cache for result attachment: top-k ids repeat
-    * heavily across queries, so the warm serving path needs zero Spark
-    * jobs. Cap ~100k entries (a few MB of urls); cleared with the handle.
+  /** docId → url cache for result attachment, under the same working-set
+    * rule as the block cache: when the live docs fit both its bound (100k
+    * entries, a few MB of urls) and [[IndexHandles.FillMaxDocs]], the
+    * first miss fills it with every live (docId, url) — one Spark job per
+    * handle — and every later lookup on this version runs none. Otherwise
+    * a miss fetches just the missing ids (one pruned scan), cached while
+    * there is room: top-k ids repeat heavily across queries. Cleared with
+    * the handle.
     */
   private val urlCache = TrieMap.empty[Long, String]
+
+  private val urlsFilled = new IndexHandles.Once({
+    val fits = meta("docCount").toLong <=
+      math.min(urlCacheCap.toLong, IndexHandles.FillMaxDocs)
+    if (fits) {
+      import spark.implicits._
+      docs.as[(Long, String)].collect().foreach(urlCache += _)
+    }
+    fits
+  })
 
   def urlsFor(docIds: Seq[Long]): Map[Long, String] = {
     import spark.implicits._
     val misses = docIds.filterNot(urlCache.contains)
-    if (misses.nonEmpty) {
-      val fetched = docs
-        .filter(col("docId").isin(misses: _*))
-        .as[(Long, String)]
-        .collect()
-      if (urlCache.size + fetched.length <= 100000)
-        fetched.foreach { case (id, u) => urlCache.put(id, u) }
-      return docIds.iterator
-        .flatMap(id => urlCache.get(id).orElse(
-          fetched.collectFirst { case (i, u) if i == id => u })
-          .map(id -> _))
-        .toMap
-    }
-    docIds.iterator.flatMap(id => urlCache.get(id).map(id -> _)).toMap
+    val fetched: Map[Long, String] =
+      if (misses.isEmpty) Map.empty
+      else if (urlsFilled.get) Map.empty
+      else {
+        val f = docs.filter(col("docId").isin(misses: _*))
+          .as[(Long, String)].collect()
+        if (urlCache.size + f.length <= urlCacheCap) urlCache ++= f
+        f.toMap
+      }
+    docIds.iterator
+      .flatMap(id => urlCache.get(id).orElse(fetched.get(id)).map(id -> _))
+      .toMap
   }
 
   /** Live candidate postings (liveness applied): the naive-scorer input.
@@ -390,6 +438,31 @@ final class IndexHandles private (
 }
 
 object IndexHandles {
+  /** Largest index whose blocks a handle's first miss collects whole, in
+    * stored postings, and whose urls it collects whole, in live docs (see
+    * [[IndexHandles#candidateBlocks]], [[IndexHandles#urlsFor]]). Chosen
+    * from first searches on indexes of 0.26M, 1M, 4.1M and 7.9M postings
+    * (4k–124k synthetic pages, `local[4]` on a 4-core host, 3 GB heap):
+    * the fill made the first search after a commit 0.0–0.6 s slower up to
+    * 4.1M postings and 1.8–2.0 s slower at 7.9M, while up to 4.1M it cut
+    * each later first-seen search from 160–400 ms to 5–30 ms (at 7.9M, to
+    * 80–110 ms, with the urls of its 124k docs fetched per id). So up to
+    * 4M postings the fill pays for itself within about three first-seen
+    * searches per index version, near the 8M cache cap only after five
+    * or six. Above these bounds the per-term and per-id fetch runs.
+    */
+  private[query] val FillMaxPostings: Long = 1L << 22
+  private[query] val FillMaxDocs: Long = 1L << 16
+
+  /** `body`, run by the first `get` only; concurrent callers wait for it.
+    * Each instance locks itself, not the handle, so one fill never queues
+    * behind the other or behind the handle's own lazy state. A body that
+    * throws runs again on the next `get`.
+    */
+  private[query] final class Once[T](body: => T) {
+    lazy val get: T = body
+  }
+
   private val cache = TrieMap.empty[String, IndexHandles]
   private val locks = TrieMap.empty[String, Object]
 
@@ -458,6 +531,15 @@ object IndexHandles {
       }
     }
   }
+
+  /** A handle outside the cache whose url cache holds `urlCacheCap`
+    * entries: specs use it to run the per-id url lookup on a small index.
+    * The caller releases it.
+    */
+  private[graft] def uncached(
+      spark: SparkSession, indexDir: String,
+      urlCacheCap: Int): IndexHandles =
+    new IndexHandles(spark, indexDir, urlCacheCap)
 
   /** Drop cached state (call after incremental updates rewrite tables). */
   def invalidate(indexDir: String): Unit =

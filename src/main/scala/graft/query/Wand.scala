@@ -314,20 +314,6 @@ object Wand {
     heap.iterator.map { case (score, docId) => (docId, score) }
   }
 
-  /** Layered candidate blocks as a typed Dataset: (_seq, TermBlock). */
-  private def layeredBlocks(
-      h: IndexHandles,
-      termIds: Seq[Long]): org.apache.spark.sql.Dataset[(Int, TermBlock)] = {
-    import h.spark.implicits._
-    h.blocksFor(termIds)
-      .select(col("_seq").cast("int").as("_1"),
-        struct(col("termId"), col("bucket"), col("minDocId"),
-          col("maxDocId"), col("n"), col("minTf"), col("maxTf"),
-          col("minDocLen"), col("maxDocLen"), col("docIdsDelta"),
-          col("tfs"), col("docLens")).as("_2"))
-      .as[(Int, TermBlock)]
-  }
-
   /** Envelope row for the tombstone-overflow path: candidate blocks and
     * tombstones co-partitioned by docId bucket (exactly one of block /
     * tombDoc is meaningful per row). NOT private: Catalyst's generated
@@ -365,7 +351,7 @@ object Wand {
     val p = params
     val bInfo = spark.sparkContext.broadcast(termInfo)
     val bucketSize = math.max(1L, h.meta("bucketSize").toLong)
-    val blocks = layeredBlocks(h, qp.terms.map(_.termId))
+    val blocks = h.layeredBlocks(Some(qp.terms.map(_.termId)))
       .map { case (seq, b) => BucketRow(b.bucket, seq, Some(b), -1L, 0) }
     val tombs = h.tombDf.get
       .select(col("docId").cast("long"), col("tombSeq").cast("int"))
@@ -457,7 +443,7 @@ object Wand {
     if (h.tombOverflow)
       return topKTombDistributed(spark, h, qp, method, k, params, termInfo)
 
-    val blocks = layeredBlocks(h, qp.terms.map(_.termId))
+    val blocks = h.layeredBlocks(Some(qp.terms.map(_.termId)))
     val bInfo = spark.sparkContext.broadcast(termInfo)
     // handle-scoped: the tombstone map is immutable per index version, so
     // re-broadcasting it per query would re-serialize up to ~120 MB each time

@@ -28,7 +28,7 @@ object ExplainAudit {
       "group, PushedFilters In(termId))",
       h.postingsFor(qp.terms.map(_.termId)))
     dump("blocks scan for WAND (same pruning expectations)",
-      h.blocksFor(qp.terms.map(_.termId)))
+      h.layeredBlocks(Some(qp.terms.map(_.termId))).toDF())
     dump("full bm25 search (WAND)",
       Search.searchTop(spark, idx, "dup data", Search.Bm25, 10))
     dump("ft_bm25_topk SQL-analog (expect ReadSchema pruned to " +

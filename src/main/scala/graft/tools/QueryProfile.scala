@@ -52,7 +52,7 @@ object QueryProfile {
       Search.searchTop(spark, indexDir, query, Search.Bm25, 10).collect()
     }
     time("blocks scan only (count)") {
-      h.blocksFor(qp.terms.map(_.termId)).count()
+      h.layeredBlocks(Some(qp.terms.map(_.termId))).count()
     }
     time("dict cached scan (count)") {
       h.terms.count()
@@ -89,16 +89,8 @@ object QueryProfile {
       }
     }
     locally {
-      import org.apache.spark.sql.functions.{col, struct}
-      import spark.implicits._
       val ids = qp.terms.map(_.termId)
-      def collected() = h.blocksFor(ids)
-        .select(col("_seq").cast("int").as("_1"),
-          struct(col("termId"), col("bucket"), col("minDocId"),
-            col("maxDocId"), col("n"), col("minTf"), col("maxTf"),
-            col("minDocLen"), col("maxDocLen"), col("docIdsDelta"),
-            col("tfs"), col("docLens")).as("_2"))
-        .as[(Int, graft.index.Schema.TermBlock)].collect()
+      def collected() = h.layeredBlocks(Some(ids)).collect()
       val blocks = collected()
       println(s"candidate blocks: ${blocks.length}")
       time("blocks collect (local path)") { collected() }

@@ -287,21 +287,39 @@ class IncrementalSpec extends AnyFunSuite {
     assert(fromBlocks == fromPostings)
   }
 
+  /** After updates docIds are stable (not url ranks), so the engine's
+    * (score, docId) tiebreak can permute equal-score runs vs the oracle's
+    * (score, url) — rank identity is defined MODULO ties (SURVEY.md
+    * §2.6.7). Compare untruncated lists as score-grouped url sets.
+    */
+  private def assertOracleAnswer(q: String): Unit = {
+    val got = Search
+      .searchTop(spark, updatedDir, q, Search.Bm25, 100000)
+      .select($"url", $"score").as[(String, Float)].collect().toVector
+    val want = oracle.searchTop(q, RefModel.Bm25, 100000)
+    def groups(v: Vector[(String, Float)]): Vector[(Float, Set[String])] =
+      v.groupBy(_._2).toVector.sortBy(-_._1)
+        .map { case (s, rows) => (s, rows.map(_._1).toSet) }
+    assert(groups(got) == groups(want))
+  }
+
   for (q <- Seq("texture array shader", "opengl", "fresh edited revision")) {
     test(s"query on updated index ≡ oracle after same M1-M4 flow: \"$q\"") {
-      // After updates docIds are stable (not url ranks), so the engine's
-      // (score, docId) tiebreak can permute equal-score runs vs the
-      // oracle's (score, url) — rank identity is defined MODULO ties
-      // (SURVEY.md §2.6.7). Compare untruncated lists as score-grouped
-      // url sets.
-      val got = Search
-        .searchTop(spark, updatedDir, q, Search.Bm25, 100000)
-        .select($"url", $"score").as[(String, Float)].collect().toVector
-      val want = oracle.searchTop(q, RefModel.Bm25, 100000)
-      def groups(v: Vector[(String, Float)]): Vector[(Float, Set[String])] =
-        v.groupBy(_._2).toVector.sortBy(-_._1)
-          .map { case (s, rows) => (s, rows.map(_._1).toSet) }
-      assert(groups(got) == groups(want))
+      assertOracleAnswer(q)
+    }
+    // the handle fills its block cache whole on an index this small; a cap
+    // of one posting keeps the per-term fetch of delta and base layers
+    // (with tombstones) under test
+    test("query on updated index ≡ oracle with the per-term block fetch: " +
+        s"\"$q\"") {
+      assert(graft.query.IndexHandles(spark, updatedDir).deltaSeqs.nonEmpty)
+      spark.conf.set("graft.driverBlockCachePostings", "1")
+      graft.query.IndexHandles.invalidate(updatedDir)
+      try assertOracleAnswer(q)
+      finally {
+        spark.conf.unset("graft.driverBlockCachePostings")
+        graft.query.IndexHandles.invalidate(updatedDir)
+      }
     }
   }
 

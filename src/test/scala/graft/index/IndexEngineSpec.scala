@@ -1,13 +1,17 @@
 package graft.index
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
 import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 import graft.corpus.Synth
 import graft.oracle.RefModel
-import graft.query.{Search, Wand}
+import graft.query.{IndexHandles, Search, Wand}
 import graft.text.Extract
 
 /** End-to-end rank-identity suite (the `sbt -batch test` gate from
@@ -293,5 +297,195 @@ class IndexEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .as[Schema.Posting]
       .collect().sortBy(p => (p.termId, p.docId)).toVector
     assert(fromBlocks == fromPostings)
+  }
+
+  /** `body`'s result and the Spark jobs it ran, counted by a listener on
+    * the job group of this thread (threads `body` starts inherit it).
+    * Listener events arrive asynchronously but in order, so once a marker
+    * job run after `body` is seen, every job of `body` has been counted.
+    */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"counted-${System.nanoTime()}"
+    val jobs = new AtomicInteger()
+    val marked = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+          .foreach { g =>
+            if (g == group) jobs.incrementAndGet()
+            else if (g == s"$group-marker") marked.countDown()
+          }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val r = try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", group)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(marked.await(60, TimeUnit.SECONDS), "marker job never seen")
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def rowsOf(q: String, useWand: Boolean) =
+    Search.searchTopRows(spark, indexDir, q, Search.Bm25, 10,
+      useWand = useWand).toVector
+
+  test("a fitting index fills its block and url caches whole: after one " +
+      "search, a first-seen query runs 0 Spark jobs and ≡ the naive " +
+      "scorer") {
+    IndexHandles.invalidate(indexDir)
+    val h = IndexHandles(spark, indexDir)
+    val (first, second) = ("opengl", "communicating nationally")
+    def termsOf(q: String) =
+      Search.plan(spark, h, q, Search.Bm25, graft.score.Scoring.Params())
+        .terms.map(_.termId).toSet
+    // per term and per id, the second query would miss on every term and
+    // every top-k doc: only a whole-index fill can serve it without a job
+    assert(termsOf(first).nonEmpty && termsOf(second).nonEmpty)
+    assert(termsOf(first).intersect(termsOf(second)).isEmpty)
+    val firstRows = rowsOf(first, useWand = true)
+    val (rows, jobs) = jobsOf(rowsOf(second, useWand = true))
+    assert(rows.nonEmpty &&
+      rows.map(_._3).toSet.intersect(firstRows.map(_._3).toSet).isEmpty)
+    assert(jobs == 0, s"first-seen query ran $jobs Spark jobs")
+    assert(rows == rowsOf(second, useWand = false))
+    IndexHandles.invalidate(indexDir)
+  }
+
+  test("above the block-cache cap the per-term fetch still runs and " +
+      "answers are unchanged") {
+    IndexHandles.invalidate(indexDir)
+    val filled = querySet.map(rowsOf(_, useWand = true))
+    spark.conf.set("graft.driverBlockCachePostings", "1")
+    IndexHandles.invalidate(indexDir)
+    try {
+      val h = IndexHandles(spark, indexDir)
+      assert(h.meta("postingCount").toLong > 1L)
+      assert(querySet.map(rowsOf(_, useWand = true)) == filled)
+      val ids = h.driverDict.get.map(_.termId).toSeq
+      // every insert evicts past a 1-posting cap: each lookup fetches
+      val (blocks, jobs) = jobsOf(h.candidateBlocks(ids.take(3)))
+      assert(jobs == 1 && blocks.nonEmpty)
+      assert(blocks.map(_._2.termId).toSet == ids.take(3).toSet)
+    } finally {
+      spark.conf.unset("graft.driverBlockCachePostings")
+      IndexHandles.invalidate(indexDir)
+    }
+  }
+
+  test("concurrent first misses on a fresh handle run exactly one fill " +
+      "job per cache") {
+    IndexHandles.invalidate(indexDir)
+    val h = IndexHandles(spark, indexDir)
+    val ids = h.driverDict.get.map(_.termId).toSeq
+    def together[T](calls: Seq[() => T]): Seq[T] = {
+      val start = new CountDownLatch(1)
+      val out = new java.util.concurrent.ConcurrentHashMap[
+        Int, Either[Throwable, T]]()
+      val threads = calls.zipWithIndex.map { case (f, i) =>
+        new Thread(() => {
+          start.await()
+          out.put(i, try Right(f()) catch { case t: Throwable => Left(t) })
+        })
+      }
+      threads.foreach(_.start())
+      start.countDown()
+      threads.foreach(_.join())
+      calls.indices.map(i => out.get(i).fold(t => throw t, identity))
+    }
+    val termSets = Seq(ids.take(2), ids.slice(5, 9), ids.slice(40, 41),
+      ids.slice(70, 76))
+    val (blocks, blockJobs) =
+      jobsOf(together(termSets.map(t => () => h.candidateBlocks(t))))
+    assert(blockJobs == 1, s"$blockJobs block fill jobs")
+    termSets.zip(blocks).foreach { case (t, bs) =>
+      val key = (b: (Int, Schema.TermBlock)) =>
+        (b._1, b._2.termId, b._2.minDocId)
+      assert(bs.map(key).toSet ==
+        h.layeredBlocks(Some(t)).collect().map(key).toSet)
+    }
+    val byId = spark.read.parquet(IndexBuilder.docsPath(indexDir))
+      .select($"docId", $"url").as[(Long, String)].collect().toMap
+    val docSets = Seq(Seq(1L, 2L), Seq(10L), Seq(100L, 200L, 300L),
+      Seq(byId.keys.max, 0L, -5L))
+    val (urls, urlJobs) =
+      jobsOf(together(docSets.map(d => () => h.urlsFor(d))))
+    assert(urlJobs == 1, s"$urlJobs url fill jobs")
+    docSets.zip(urls).foreach { case (d, m) =>
+      assert(m == d.flatMap(id => byId.get(id).map(id -> _)).toMap)
+    }
+    IndexHandles.invalidate(indexDir)
+  }
+
+  test("after an incremental update the new handle's fill holds the delta " +
+      "layers, and replaced docs do not surface") {
+    val ts = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
+    def page(i: Int, body: String, t: java.sql.Timestamp = ts) =
+      Schema.Page(f"/fill/doc$i%03d", t, null, body, "en")
+    val v1 = (0 until 60).map(i =>
+      page(i, if (i % 10 == 0) s"oldword filler$i shared" else
+        s"steady filler$i shared"))
+    val later = new java.sql.Timestamp(ts.getTime + 3600 * 1000L)
+    val v2 = v1.map(p =>
+      if (p.url.takeRight(3).toInt % 10 == 0)
+        p.copy(text = p.text.replace("oldword", "newword"), warc_ts = later)
+      else p) ++ (60 until 66).map(i => page(i, s"newword extra$i shared"))
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_fill_delta_").toString
+    // 6 of 60 docs replaced: under the 20% tombstone share that compacts
+    val conf = IndexBuilder.BuildConf(partitions = 4, postingGroups = 2,
+      queryBuckets = 4)
+    IndexBuilder.build(spark, spark.createDataset(v1).toDF(), dir, conf)
+    def rows(q: String, useWand: Boolean) = Search.searchTopRows(spark, dir,
+      q, Search.Bm25, 100, useWand = useWand).toVector
+    assert(rows("oldword", useWand = true).size == 6) // fills v1's handle
+    assert(Incremental.update(spark, spark.createDataset(v2).toDF(), dir,
+      conf).changed)
+    val h = IndexHandles(spark, dir)
+    assert(h.deltaSeqs.nonEmpty && h.tombMap.nonEmpty)
+    assert(rows("extra", useWand = true).nonEmpty) // fills the new handle
+    val (fresh, jobs) = jobsOf(rows("newword", useWand = true))
+    assert(jobs == 0, s"first-seen query ran $jobs Spark jobs")
+    assert(fresh == rows("newword", useWand = false))
+    val newword = Search.plan(spark, h, "newword", Search.Bm25,
+      graft.score.Scoring.Params()).terms.map(_.termId)
+    assert(h.candidateBlocks(newword).exists(_._1 > 0),
+      "no delta layer in the filled cache")
+    assert(fresh.map(_._1).toSet ==
+      (v2.filter(_.text.contains("newword")).map(_.url).toSet))
+    assert(rows("oldword", useWand = true).isEmpty)
+    assert(rows("oldword", useWand = false).isEmpty)
+    // a cap equal to the LIVE postings: the fill would also hold the dead
+    // postings of the replaced docs, so the handle fetches per term
+    spark.conf.set("graft.driverBlockCachePostings", h.meta("postingCount"))
+    IndexHandles.invalidate(dir)
+    try {
+      assert(rows("extra", useWand = true).nonEmpty)
+      val (perTerm, perTermJobs) = jobsOf(rows("newword", useWand = true))
+      assert(perTermJobs > 0 && perTerm == fresh)
+    } finally {
+      spark.conf.unset("graft.driverBlockCachePostings")
+      IndexHandles.invalidate(dir)
+    }
+    // the per-id url lookup over the same snapshot, on a handle whose url
+    // cache is below the index: live ids resolve, replaced and unknown
+    // ids do not, and only a lookup with a miss runs a job
+    val live = h.urlsFor(h.docs.select($"docId").as[Long].collect().toSeq)
+    val dead = spark.read.parquet(IndexBuilder.docsPath(dir))
+      .select($"docId").as[Long].collect().toSet -- live.keySet
+    val small = IndexHandles.uncached(spark, dir, urlCacheCap = 2)
+    try {
+      val ids = live.keys.toSeq.sorted
+      Seq(ids.take(3), ids.slice(3, 4), ids.takeRight(2) ++ dead :+ -1L,
+          ids.slice(3, 4)).zip(Seq(true, true, true, false))
+        .foreach { case (asked, misses) =>
+          val (got, jobs) = jobsOf(small.urlsFor(asked))
+          assert(got == asked.flatMap(id => live.get(id).map(id -> _)).toMap)
+          assert((jobs > 0) == misses, s"$jobs jobs for $asked")
+        }
+    } finally small.release()
+    IndexHandles.invalidate(dir)
   }
 }

@@ -421,4 +421,25 @@ class OpsSpec extends AnyFunSuite {
       nlist = 2, nprobe = 2, m = 4, ksub = 4, rerank = 0, iters = 2)
     assert(r.collect().nonEmpty)
   }
+  test("ivf-pq over empty embeddings → empty result (no codebook to " +
+      "index, built, memoized or reloaded)") {
+    val d = java.nio.file.Files
+      .createTempDirectory("graft_ops_empty_").toString
+    Seq.empty[(Long, Array[Float], Int)].toDF("vec_id", "embedding", "label")
+      .coalesce(1).write.mode("overwrite")
+      .parquet(s"$d/embeddings.parquet")
+    for (rerank <- Seq(3, 0))
+      assert(Ann.ivfPqTopK(spark, d, queryVecId = 0L, k = 3, nlist = 2,
+        nprobe = 2, m = 4, ksub = 4, rerank = rerank, iters = 2)
+        .collect().isEmpty)
+    val pqDir = Ann.ensureIvfPqIndex(spark, d, nlist = 2, m = 4, ksub = 4,
+      iters = 2)
+    val (cents, books) = Ann.loadIvfPq(spark, pqDir)
+    assert(cents.isEmpty && books.isEmpty)
+    for (rerank <- Seq(3, 0)) {
+      val r = Ann.ivfPqQuery(spark, d, pqDir, Array.fill(8)(0.5f), k = 3,
+        nprobe = 2, rerank = rerank)
+      assert(r.columns.toSeq == Seq("vec_id", "cos") && r.collect().isEmpty)
+    }
+  }
 }
