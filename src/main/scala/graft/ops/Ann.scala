@@ -42,26 +42,37 @@ object Ann {
       .select("vec_id", "cos")
   }
 
+  private def noHits(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    Seq.empty[(Long, Double)].toDF("vec_id", "cos")
+  }
+
+  /** The query vector of `queryVecId` (pushed-down vec_id filter); None for
+    * a missing id or null embedding — every ANN entry point then answers
+    * with an empty frame, not a throw.
+    */
+  private def queryVector(
+      spark: SparkSession, sfDir: String, queryVecId: Long)
+      : Option[Array[Float]] = {
+    import spark.implicits._
+    emb(spark, sfDir).filter(col("vec_id") === queryVecId)
+      .select(col("embedding")).as[Array[Float]]
+      .collect().headOption.filter(_ != null)
+  }
+
   /** Exact cosine top-k neighbors of `queryVecId` (brute force: one scan,
     * one narrow top-k — the correct baseline and the fallback path). The
-    * query vector is fetched once (pushed-down vec_id filter) and scored
-    * as a literal — see [[topKAgainst]].
+    * query vector is fetched once and scored as a literal — see
+    * [[topKAgainst]].
     */
   def bruteTopK(
       spark: SparkSession,
       sfDir: String,
       queryVecId: Long = 0L,
-      k: Int = 10): DataFrame = {
-    import spark.implicits._
-    val e = emb(spark, sfDir)
-    e.filter(col("vec_id") === queryVecId)
-      .select(col("embedding")).as[Array[Float]]
-      .collect().headOption.filter(_ != null) match {
-      case None => Seq.empty[(Long, Double)].toDF("vec_id", "cos")
-      case Some(qv) =>
-        topKAgainst(e.filter(col("vec_id") =!= queryVecId), qv, k)
-    }
-  }
+      k: Int = 10): DataFrame =
+    queryVector(spark, sfDir, queryVecId).fold(noHits(spark))(qv =>
+      topKAgainst(
+        emb(spark, sfDir).filter(col("vec_id") =!= queryVecId), qv, k))
 
   def bruteTopKSql(queryVecId: Long = 0L, k: Int = 10): String =
     s"""SELECT e.vec_id,
@@ -187,13 +198,6 @@ object Ann {
 
   // ---- IVF-flat -----------------------------------------------------------
 
-  /** Bounded driver memo of trained coarse quantizers (nlist × dim doubles
-    * — a few KB each). Keyed like the LiveResultCache entries (input
-    * fingerprint + params) so a rewritten input retrains.
-    */
-  private val centroidMemo = scala.collection.concurrent.TrieMap
-    .empty[String, Array[Array[Double]]]
-
   private def unitD(v: Array[Float]): Array[Double] = {
     var s = 0.0
     var i = 0
@@ -298,23 +302,9 @@ object Ann {
     cents
   }
 
-  /** Stable per-(input, nlist, iters) IVF index location — mirrors
-    * `Corpus.indexDirFor` (readable-but-lossy sanitization + raw-key hash
-    * suffix for injectivity).
-    */
-  def ivfIndexDirFor(sfDir: String, nlist: Int, iters: Int): String = {
-    val safe = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$sfDir|$nlist|$iters"
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .take(4).map(b => f"$b%02x").mkString
-    s"/tmp/graft_ivf_${safe}_${nlist}_$digest"
-  }
-
-  private val ivfBuildLock = new Object
-
-  /** Trains the coarse quantizer and PERSISTS the IVF index — the
-    * on-disk layout is the scale contract, not a cache:
+  /** Trains the coarse quantizer and PERSISTS the IVF index as a
+    * [[DerivedIndex]] of `embeddings.parquet` — the on-disk layout is the
+    * scale contract, not a cache:
     *
     *   - `cells/cell=<c>/` parquet  (vec_id, embedding), written
     *     `partitionBy("cell")` so each cell is its own partition
@@ -328,54 +318,58 @@ object Ann {
     *     instead of every task writing a sliver of every cell.
     *   - `centroids/` (cell, centroid ARRAY<DOUBLE>) — nlist rows, KBs;
     *     queries reload these instead of retraining.
-    *   - `_meta`      params + source fingerprint, written atomically
-    *     LAST: marker existence ⇒ cells/centroids complete; a rewritten
-    *     source table (fingerprint drift) rebuilds in place.
     *
-    * Returns the index dir; a second call with matching meta is a pure
-    * FS-metadata check (no Spark job, no retrain).
+    * Returns the index dir; a second call on an unchanged source is a
+    * pure FS-metadata check (no Spark job, no retrain).
     */
   def ensureIvfIndex(
       spark: SparkSession,
       sfDir: String,
       nlist: Int = 16,
-      iters: Int = 5): String = ivfBuildLock.synchronized {
+      iters: Int = 5): String =
+    DerivedIndex.ensure(spark, "ivf", s"$sfDir/embeddings.parquet",
+      s"nlist=$nlist;iters=$iters") { dir =>
+      import spark.implicits._
+      val cents = trainIvfCentroids(spark, sfDir, nlist, iters)
+      val bc = spark.sparkContext.broadcast(cents)
+      val parts = cellWriteParts(spark, sfDir)
+      emb(spark, sfDir)
+        .select(col("vec_id"), col("embedding"))
+        .as[(Long, Array[Float])]
+        .map { case (id, v) => (id, argmaxDot(unitD(v), bc.value), v) }
+        .toDF("vec_id", "cell", "embedding")
+        .repartitionByRange(parts, col("cell"), col("vec_id"))
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(s"$dir/cells")
+      bc.destroy() // consumed by the write action above; don't leak per rebuild
+      writeCentroids(spark, dir, cents)
+    }
+
+  /** `centroids/` (cell, centroid) of an IVF or IVF-PQ index: one file. */
+  private def writeCentroids(
+      spark: SparkSession, dir: String, cents: Array[Array[Double]]): Unit = {
     import spark.implicits._
-    val dir = ivfIndexDirFor(sfDir, nlist, iters)
-    val fp = LiveResultCache.fingerprint(spark, s"$sfDir/embeddings.parquet")
-    val want = s"nlist=$nlist;iters=$iters;fp=$fp"
-    val metaP = new org.apache.hadoop.fs.Path(s"$dir/_meta")
-    val fs = metaP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (readSmall(fs, metaP).contains(want)) return dir
-    // Invalidate FIRST: the overwrite below destroys cells/, and the
-    // marker's contract is "existence ⇒ cells/centroids complete". A
-    // crash mid-rebuild (or an ivfQuery racing this lock from another
-    // JVM) must find NO marker and fail/rebuild — not read the stale
-    // marker and serve a partial cells table.
-    if (fs.exists(metaP)) fs.delete(metaP, false)
-    val cents = trainIvfCentroids(spark, sfDir, nlist, iters)
-    val bc = spark.sparkContext.broadcast(cents)
-    val parts = cellWriteParts(spark, sfDir)
-    emb(spark, sfDir)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .map { case (id, v) => (id, argmaxDot(unitD(v), bc.value), v) }
-      .toDF("vec_id", "cell", "embedding")
-      .repartitionByRange(parts, col("cell"), col("vec_id"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$dir/cells")
-    bc.destroy() // consumed by the write action above; don't leak per rebuild
     cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
       .toDF("cell", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-    graft.index.DeltaLog.writeAtomicString(fs, s"$dir/_meta", want)
-    // same bound as the query-path miss: fingerprint-bearing keys are
-    // fresh after every rebuild, so an unguarded put would grow forever
-    // in a long-lived serving JVM whose source table is rewritten
-    if (centroidMemo.size > 8) centroidMemo.clear()
-    centroidMemo.put(s"$dir|$want", cents)
-    dir
   }
+
+  /** The top-`nprobe` cells of unit query `q`: highest centroid dot
+    * first, ties to the lower cell id.
+    */
+  private def probeCells(
+      cents: Array[Array[Double]], q: Array[Double], nprobe: Int): Seq[Int] =
+    cents.indices
+      .map(c => c -> {
+        var s = 0.0
+        var i = 0
+        val d = math.min(cents(c).length, q.length)
+        while (i < d) { s += cents(c)(i) * q(i); i += 1 }
+        s
+      })
+      .sortBy { case (c, s) => (-s, c) }
+      .take(math.max(1, nprobe))
+      .map(_._1)
 
   /** Write-side partition count for the cells table, derived from the
     * table's row count (guide §6 "aim for output files in the 128 MB-1 GB
@@ -391,13 +385,6 @@ object Ann {
     math.max(1, math.min(spark.sparkContext.defaultParallelism,
       math.ceil(n / 50000.0).toInt))
   }
-
-  private def readSmall(
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Option[String] =
-    if (!fs.exists(p)) None
-    else Some(new String(graft.index.DeltaLog.readSmallBytes(fs, p),
-      java.nio.charset.StandardCharsets.UTF_8))
 
   /** Centroids reloaded from a persisted index (cell-ordered). */
   def loadIvfCentroids(
@@ -422,8 +409,8 @@ object Ann {
   }
 
   /** Query a persisted IVF index WITHOUT retraining: centroids come from
-    * the index's own `centroids/` table (driver memo keyed on the meta
-    * content, so a rebuilt index re-reads), and the cells scan carries a
+    * the index's own `centroids/` table ([[DerivedIndex.load]]'s memo, so
+    * a rebuilt index re-reads), and the cells scan carries a
     * `cell IN (probes)` partition filter — only the probed partition
     * directories are listed and read. Recall < 1 for nprobe < nlist (the
     * standard IVF trade); nprobe = nlist degenerates to exact brute force
@@ -437,30 +424,10 @@ object Ann {
       k: Int = 10,
       nprobe: Int = 4,
       excludeVecId: Long = -1L): DataFrame = {
-    import spark.implicits._
-    val meta = readSmall(
-      new org.apache.hadoop.fs.Path(ivfDir).getFileSystem(
-        spark.sparkContext.hadoopConfiguration),
-      new org.apache.hadoop.fs.Path(s"$ivfDir/_meta")).getOrElse(
-      throw new IllegalStateException(s"no IVF index at $ivfDir"))
-    val cents = centroidMemo.getOrElseUpdate(s"$ivfDir|$meta", {
-      if (centroidMemo.size > 8) centroidMemo.clear() // bounded, rebuildable
-      loadIvfCentroids(spark, ivfDir)
-    })
-    if (cents.isEmpty || queryVec.isEmpty)
-      return Seq.empty[(Long, Double)].toDF("vec_id", "cos")
-    val qUnit = unitD(queryVec)
-    val probes: Seq[Int] = cents.indices
-      .map(c => c -> {
-        var s = 0.0
-        var i = 0
-        val d = math.min(cents(c).length, qUnit.length)
-        while (i < d) { s += cents(c)(i) * qUnit(i); i += 1 }
-        s
-      })
-      .sortBy { case (c, s) => (-s, c) }
-      .take(math.max(1, nprobe))
-      .map(_._1)
+    val cents = DerivedIndex.load(spark, ivfDir, "IVF")(
+      loadIvfCentroids(spark, ivfDir))
+    if (cents.isEmpty || queryVec.isEmpty) return noHits(spark)
+    val probes = probeCells(cents, unitD(queryVec), nprobe)
     topKAgainst(
       spark.read.parquet(s"$ivfDir/cells")
         .filter(col("cell").isin(probes: _*))
@@ -469,10 +436,9 @@ object Ann {
   }
 
   /** IVF-flat ANN top-k over the source table: ensures the persisted
-    * index, looks the query vector up from the source (pushed-down
-    * `vec_id` filter), and runs [[ivfQuery]]'s pruned scan. A missing
-    * query id yields an empty frame, not a throw (same contract as
-    * [[bruteTopK]]/[[lshTopK]]).
+    * index, looks the query vector up from the source, and runs
+    * [[ivfQuery]]'s pruned scan. A missing query id yields an empty frame,
+    * not a throw (same contract as [[bruteTopK]]/[[lshTopK]]).
     */
   def ivfTopK(
       spark: SparkSession,
@@ -482,16 +448,9 @@ object Ann {
       nlist: Int = 16,
       nprobe: Int = 4,
       iters: Int = 5): DataFrame = {
-    import spark.implicits._
     val ivfDir = ensureIvfIndex(spark, sfDir, nlist, iters)
-    emb(spark, sfDir)
-      .filter(col("vec_id") === queryVecId)
-      .select(col("embedding")).as[Array[Float]]
-      .collect().headOption match {
-      case None => Seq.empty[(Long, Double)].toDF("vec_id", "cos")
-      case Some(v) =>
-        ivfQuery(spark, ivfDir, v, k, nprobe, excludeVecId = queryVecId)
-    }
+    queryVector(spark, sfDir, queryVecId).fold(noHits(spark))(v =>
+      ivfQuery(spark, ivfDir, v, k, nprobe, excludeVecId = queryVecId))
   }
 
   /** Embedding-cosine near-duplicate pairs via shared LSH buckets.
@@ -698,29 +657,15 @@ object Ann {
     code
   }
 
-  def ivfPqIndexDirFor(
-      sfDir: String, nlist: Int, m: Int, ksub: Int, iters: Int): String = {
-    val safe = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$sfDir|pq|$nlist|$m|$ksub|$iters"
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .take(4).map(b => f"$b%02x").mkString
-    s"/tmp/graft_ivfpq_${safe}_${nlist}_${m}_$digest"
-  }
-
-  private val pqMemo = scala.collection.concurrent.TrieMap
-    .empty[String, (Array[Array[Double]], Array[Array[Array[Double]]])]
-
-  /** Trains coarse + PQ quantizers and persists the IVF-PQ index:
+  /** Trains coarse + PQ quantizers and persists the IVF-PQ index as a
+    * [[DerivedIndex]] of `embeddings.parquet`:
     *
     *   - `cells/cell=<c>/` parquet (vec_id, code BINARY) written
     *     `partitionBy("cell")` — same partition-pruned inverted-list
     *     layout as [[ensureIvfIndex]], but m bytes per vector instead of
     *     dim floats;
     *   - `centroids/`  coarse (cell, centroid);
-    *   - `codebooks/`  (sub, idx, centroid) — m·ksub rows, KBs;
-    *   - `_meta` params + source fingerprint written atomically LAST
-    *     (and deleted FIRST on rebuild: marker ⇒ complete index).
+    *   - `codebooks/`  (sub, idx, centroid) — m·ksub rows, KBs.
     */
   def ensureIvfPqIndex(
       spark: SparkSession,
@@ -728,54 +673,40 @@ object Ann {
       nlist: Int = 16,
       m: Int = 8,
       ksub: Int = 16,
-      iters: Int = 5): String = ivfBuildLock.synchronized {
-    import spark.implicits._
-    val dir = ivfPqIndexDirFor(sfDir, nlist, m, ksub, iters)
-    val fp = LiveResultCache.fingerprint(spark, s"$sfDir/embeddings.parquet")
-    val want = s"pq;nlist=$nlist;m=$m;ksub=$ksub;iters=$iters;fp=$fp"
-    val metaP = new org.apache.hadoop.fs.Path(s"$dir/_meta")
-    val fs = metaP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (readSmall(fs, metaP).contains(want)) return dir
-    if (fs.exists(metaP)) fs.delete(metaP, false)
-    val cents = trainIvfCentroids(spark, sfDir, nlist, iters)
-    val books = trainPqCodebooks(spark, sfDir, m, ksub, iters)
-    val bc = spark.sparkContext.broadcast((cents, books))
-    val parts = cellWriteParts(spark, sfDir)
-    emb(spark, sfDir)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .map { case (id, vRaw) =>
-        val (cs, bk) = bc.value
-        val v = unitD(vRaw)
-        val bounds = subBounds(v.length, bk.length)
-        (id, argmaxDot(v, cs), encodePq(v, bounds, bk))
-      }
-      .toDF("vec_id", "cell", "code")
-      .repartitionByRange(parts, col("cell"), col("vec_id"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$dir/cells")
-    bc.destroy() // consumed by the write action above; don't leak per rebuild
-    cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-    books.zipWithIndex.flatMap { case (bk, s) =>
-      bk.zipWithIndex.map { case (ct, j) => (s, j, ct.toSeq) }
-    }.toSeq.toDF("sub", "idx", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks")
-    graft.index.DeltaLog.writeAtomicString(fs, s"$dir/_meta", want)
-    // bounded like the query-path miss: rebuilds mint fresh keys forever
-    if (pqMemo.size > 8) pqMemo.clear()
-    pqMemo.put(s"$dir|$want", (cents, books))
-    dir
-  }
+      iters: Int = 5): String =
+    DerivedIndex.ensure(spark, "ivfpq", s"$sfDir/embeddings.parquet",
+      s"pq;nlist=$nlist;m=$m;ksub=$ksub;iters=$iters") { dir =>
+      import spark.implicits._
+      val cents = trainIvfCentroids(spark, sfDir, nlist, iters)
+      val books = trainPqCodebooks(spark, sfDir, m, ksub, iters)
+      val bc = spark.sparkContext.broadcast((cents, books))
+      val parts = cellWriteParts(spark, sfDir)
+      emb(spark, sfDir)
+        .select(col("vec_id"), col("embedding"))
+        .as[(Long, Array[Float])]
+        .map { case (id, vRaw) =>
+          val (cs, bk) = bc.value
+          val v = unitD(vRaw)
+          val bounds = subBounds(v.length, bk.length)
+          (id, argmaxDot(v, cs), encodePq(v, bounds, bk))
+        }
+        .toDF("vec_id", "cell", "code")
+        .repartitionByRange(parts, col("cell"), col("vec_id"))
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(s"$dir/cells")
+      bc.destroy() // consumed by the write action above; don't leak per rebuild
+      writeCentroids(spark, dir, cents)
+      books.zipWithIndex.flatMap { case (bk, s) =>
+        bk.zipWithIndex.map { case (ct, j) => (s, j, ct.toSeq) }
+      }.toSeq.toDF("sub", "idx", "centroid")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks")
+    }
 
   /** Coarse centroids + codebooks reloaded from a persisted PQ index. */
   def loadIvfPq(spark: SparkSession, pqDir: String)
       : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
     import spark.implicits._
-    val cents = spark.read.parquet(s"$pqDir/centroids")
-      .orderBy("cell").select("centroid").as[Seq[Double]]
-      .collect().map(_.toArray)
+    val cents = loadIvfCentroids(spark, pqDir)
     val raw = spark.read.parquet(s"$pqDir/codebooks")
       .orderBy("sub", "idx")
       .select("sub", "idx", "centroid").as[(Int, Int, Seq[Double])]
@@ -803,29 +734,12 @@ object Ann {
       rerank: Int = 64,
       excludeVecId: Long = -1L): DataFrame = {
     import spark.implicits._
-    val meta = readSmall(
-      new org.apache.hadoop.fs.Path(pqDir).getFileSystem(
-        spark.sparkContext.hadoopConfiguration),
-      new org.apache.hadoop.fs.Path(s"$pqDir/_meta")).getOrElse(
-      throw new IllegalStateException(s"no IVF-PQ index at $pqDir"))
-    val (cents, books) = pqMemo.getOrElseUpdate(s"$pqDir|$meta", {
-      if (pqMemo.size > 8) pqMemo.clear() // bounded, rebuildable
-      loadIvfPq(spark, pqDir)
-    })
+    val (cents, books) = DerivedIndex.load(spark, pqDir, "IVF-PQ")(
+      loadIvfPq(spark, pqDir))
     if (cents.isEmpty || books.isEmpty || queryVec.isEmpty)
-      return Seq.empty[(Long, Double)].toDF("vec_id", "cos")
+      return noHits(spark)
     val qUnit = unitD(queryVec)
-    val probes: Seq[Int] = cents.indices
-      .map(c => c -> {
-        var s = 0.0
-        var i = 0
-        val d = math.min(cents(c).length, qUnit.length)
-        while (i < d) { s += cents(c)(i) * qUnit(i); i += 1 }
-        s
-      })
-      .sortBy { case (c, s) => (-s, c) }
-      .take(math.max(1, nprobe))
-      .map(_._1)
+    val probes = probeCells(cents, qUnit, nprobe)
     val cellScan = spark.read.parquet(s"$pqDir/cells")
       .filter(col("cell").isin(probes: _*))
       .filter(col("vec_id") =!= excludeVecId)
@@ -897,16 +811,9 @@ object Ann {
       ksub: Int = 16,
       rerank: Int = 64,
       iters: Int = 5): DataFrame = {
-    import spark.implicits._
     val pqDir = ensureIvfPqIndex(spark, sfDir, nlist, m, ksub, iters)
-    emb(spark, sfDir)
-      .filter(col("vec_id") === queryVecId)
-      .select(col("embedding")).as[Array[Float]]
-      .collect().headOption match {
-      case None => Seq.empty[(Long, Double)].toDF("vec_id", "cos")
-      case Some(v) =>
-        ivfPqQuery(spark, sfDir, pqDir, v, k, nprobe, rerank,
-          excludeVecId = queryVecId)
-    }
+    queryVector(spark, sfDir, queryVecId).fold(noHits(spark))(v =>
+      ivfPqQuery(spark, sfDir, pqDir, v, k, nprobe, rerank,
+        excludeVecId = queryVecId))
   }
 }

@@ -2,15 +2,15 @@ package graft.ops
 
 import java.sql.Timestamp
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.index.{IndexBuilder, Schema}
+import graft.index.IndexBuilder
 
 /** Adapters between the driver's `/root/testdata` tables and the engine's
-  * corpus shape, plus per-sf index caching (checkpoint markers make repeat
-  * builds no-ops).
+  * corpus shape, plus the per-sf FT index as a [[DerivedIndex]]: a repeat
+  * ensure is a no-op while `documents.parquet` is unchanged, and a
+  * rewritten table rebuilds from scratch (never from the old checkpoints).
   */
 object Corpus {
 
@@ -29,39 +29,21 @@ object Corpus {
         col("lang"))
   }
 
-  /** Stable per-sf index location; build skips entirely when meta.json
-    * already exists (all stages checkpointed).
-    */
-  def indexDirFor(sfDir: String): String = {
-    // the readable sanitization is LOSSY ("/a/sf-1" and "/a/sf_1" collide)
-    // and a collision silently serves the wrong prebuilt index — suffix a
-    // hash of the raw path to make the mapping injective
-    val safe = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .take(4).map(b => f"$b%02x").mkString
-    s"/tmp/graft_idx_${safe}_$digest"
-  }
-
-  def ensureIndex(spark: SparkSession, sfDir: String): String = {
-    val dir = indexDirFor(sfDir)
-    val fs = new Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(s"$dir/meta.json"))) {
-      // size the partition/group counts to the corpus (parquet metadata
-      // count is free): a 5k-doc table does not need 32 range partitions
-      val nDocs = spark.read.parquet(s"$sfDir/documents.parquet").count()
-      val parts = math.min(32L, math.max(4L, nDocs / 2000L)).toInt
-      // urls derive 1:1 from doc_id → unique by construction
-      IndexBuilder.build(spark, documentsAsPages(spark, sfDir), dir,
-        IndexBuilder.BuildConf(
-          partitions = parts,
-          postingGroups = math.min(4, parts),
-          queryBuckets = math.max(8, parts * 2),
-          assumeUniqueUrls = true))
+  def ensureIndex(spark: SparkSession, sfDir: String): String =
+    DerivedIndex.ensure(spark, "idx", s"$sfDir/documents.parquet", "ft") {
+      dir =>
+        // size the partition/group counts to the corpus (parquet metadata
+        // count is free): a 5k-doc table does not need 32 range partitions
+        val nDocs = spark.read.parquet(s"$sfDir/documents.parquet").count()
+        val parts = math.min(32L, math.max(4L, nDocs / 2000L)).toInt
+        // urls derive 1:1 from doc_id → unique by construction
+        IndexBuilder.build(spark, documentsAsPages(spark, sfDir), dir,
+          IndexBuilder.BuildConf(
+            partitions = parts,
+            postingGroups = math.min(4, parts),
+            queryBuckets = math.max(8, parts * 2),
+            assumeUniqueUrls = true))
     }
-    dir
-  }
 
   /** Build metrics of the cached index as a 1-row DataFrame. */
   def buildMetricsDf(spark: SparkSession, sfDir: String): DataFrame = {

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.corpus.Synth
 import graft.index.IndexBuilder
+import graft.ops.DerivedIndex
 import graft.query.{IndexHandles, Search}
 
 /** Latency evidence for the DISTRIBUTED dictionary path (SURVEY §7.4 risk
@@ -29,7 +30,7 @@ object BigDictBench {
     val flags = args.filter(_.startsWith("--"))
     val rest = args.filterNot(_.startsWith("--"))
     val nDocs = rest.headOption.map(_.toLong).getOrElse(600000L)
-    val outFile = rest.lift(1).getOrElse("/tmp/bigdict.json")
+    val outFile = rest.lift(1).getOrElse(s"${DerivedIndex.root}/bigdict.json")
 
     val spark = ScalingBench.session(
       Runtime.getRuntime.availableProcessors())
@@ -39,14 +40,11 @@ object BigDictBench {
     // meta is present) so QueryProfile can iterate on the same index
     val keep = flags.contains("--keep")
     val dir =
-      if (keep) s"/tmp/graft_bigdict_keep_$nDocs"
+      if (keep) s"${DerivedIndex.root}/graft_bigdict_keep_$nDocs"
       else Files.createTempDirectory("graft_bigdict_").toString
     val corpusDir = s"$dir/corpus"
-    val haveIndex = keep && {
-      val f = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      f.exists(new org.apache.hadoop.fs.Path(s"$dir/meta.json"))
-    }
+    // both dir choices are local temp dirs
+    val haveIndex = keep && Files.exists(Paths.get(dir, "meta.json"))
     if (!haveIndex) {
       // per-doc unique numeric tokens (disjoint from Synth's vocab
       // numbers): uid bases 7e6/9e6/11e6 + doc index

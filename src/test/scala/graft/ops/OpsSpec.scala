@@ -339,32 +339,156 @@ class OpsSpec extends AnyFunSuite {
       Multimodal.synthPng(30L)._1))
   }
 
+  private def writeDocs(d: String, texts: Seq[(Long, String)]): Unit =
+    texts.toDF("doc_id", "text")
+      .withColumn("lang", lit("en"))
+      .withColumn("source", lit("s"))
+      .withColumn("n_chars", length($"text").cast("long"))
+      .coalesce(1).write.mode("overwrite")
+      .parquet(s"$d/documents.parquet")
+
   test("LiveResultCache keys on content: a rewritten input at the SAME " +
       "path misses the memo and recomputes") {
     val d = java.nio.file.Files
       .createTempDirectory("graft_cachefp_").toString
-    def write(texts: Seq[(Long, String)]): Unit =
-      texts.toDF("doc_id", "text")
-        .withColumn("lang", lit("en"))
-        .withColumn("source", lit("s"))
-        .withColumn("n_chars", length($"text").cast("long"))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$d/documents.parquet")
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
       "lambda mu nu xi omicron pi rho sigma tau upsilon"
     // two exact dup groups → simhash finds the (0,1) pair
-    write(Seq(0L -> base, 1L -> base,
+    writeDocs(d, Seq(0L -> base, 1L -> base,
       2L -> "one two three four five six seven eight nine ten"))
     val first = Dedup.simhashPairs(spark, d)
       .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
     assert(first == Set((0L, 1L)))
     // rewrite the SAME path: doc 1 no longer duplicates doc 0, doc 2 does
-    write(Seq(0L -> base, 1L -> "unrelated words here entirely different",
-      2L -> base))
+    writeDocs(d, Seq(0L -> base,
+      1L -> "unrelated words here entirely different", 2L -> base))
     val second = Dedup.simhashPairs(spark, d)
       .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
     // a (path, params)-only key would have served the stale (0,1) result
     assert(second == Set((0L, 2L)))
+  }
+
+  private def writeVecs(d: String, vecs: Seq[(Long, Array[Float])]): Unit =
+    vecs.map { case (id, v) => (id, v, 0) }
+      .toDF("vec_id", "embedding", "label")
+      .coalesce(1).write.mode("overwrite")
+      .parquet(s"$d/embeddings.parquet")
+
+  /** Two planted clusters of 4 around random unit centers (ids id0..+3
+    * and id0+4..+7, so the stride init seeds one centroid in each).
+    */
+  private def clusteredVecs(seed: Int, id0: Long): Seq[(Long, Array[Float])] = {
+    val rnd = new scala.util.Random(seed)
+    def unit(v: Array[Float]): Array[Float] = {
+      val n = math.sqrt(v.map(x => x * x.toDouble).sum).toFloat
+      v.map(_ / n)
+    }
+    val centers = Seq.fill(2)(unit(Array.fill(16)(rnd.nextFloat() - 0.5f)))
+    (0 until 8).map { i =>
+      id0 + i -> unit(centers(i / 4).map(x => x + 0.1f * (rnd.nextFloat() - 0.5f)))
+    }
+  }
+
+  private def hits(df: org.apache.spark.sql.DataFrame): Vector[(Long, Double)] =
+    df.select($"vec_id", $"cos").as[(Long, Double)].collect().toVector
+
+  test("FT index over a documents table rewritten at the SAME path is " +
+      "rebuilt from scratch, and search answers from the new documents") {
+    import graft.query.Search
+    val d = java.nio.file.Files.createTempDirectory("graft_ftdrift_").toString
+    def urls(idx: String, q: String): Set[String] =
+      Search.searchTop(spark, idx, q, Search.Bm25, 10)
+        .select($"url").as[String].collect().toSet
+    // BM25 idf is positive only for terms in fewer than half the docs
+    val filler = Seq(4L -> "seal pup", 5L -> "orca pod", 6L -> "tern nest")
+    writeDocs(d, Seq(0L -> "walrus tusk ice floe", 1L -> "walrus colony",
+      2L -> "penguin rookery", 3L -> "kelp forest") ++ filler)
+    val idx = Corpus.ensureIndex(spark, d)
+    assert(urls(idx, "walrus") ==
+      Set("doc000000000000", "doc000000000001"))
+    // crash window with an unchanged source: the marker is gone, the
+    // rerun resumes this build's own checkpoints (the ft stage is skipped)
+    val ftMarker = new java.io.File(s"$idx/_lineage/build0/ft__-1.json")
+    val ftMarkedAt = ftMarker.lastModified()
+    new java.io.File(s"$idx/_meta").delete()
+    assert(Corpus.ensureIndex(spark, d) == idx)
+    assert(ftMarker.lastModified() == ftMarkedAt)
+
+    writeDocs(d, Seq(0L -> "penguin chick", 1L -> "walrus tusk",
+      2L -> "penguin egg", 3L -> "krill swarm", 7L -> "gull cry") ++ filler)
+    assert(Corpus.ensureIndex(spark, d) == idx, "dir is stable per source")
+    assert(urls(idx, "walrus") == Set("doc000000000001"))
+    assert(urls(idx, "penguin") ==
+      Set("doc000000000000", "doc000000000002"))
+    assert(urls(idx, "krill") == Set("doc000000000003"))
+    val m = Corpus.buildMetricsDf(spark, d).collect()(0)
+    assert(m.getAs[String]("buildId") == "build0")
+    assert(m.getAs[Long]("docCount") == 8L)
+  }
+
+  test("IVF and IVF-PQ over an embeddings table rewritten at the SAME " +
+      "path rebuild, and queries answer from the new centroids") {
+    val d = java.nio.file.Files.createTempDirectory("graft_ivfdrift_").toString
+    val fresh = java.nio.file.Files.createTempDirectory("graft_ivffresh_")
+      .toString
+    writeVecs(d, clusteredVecs(seed = 1, id0 = 0L))
+    val qv = clusteredVecs(seed = 2, id0 = 100L).head._2
+    // warm both memos on the old index
+    val ivfDir = Ann.ensureIvfIndex(spark, d, nlist = 2, iters = 3)
+    val pqDir = Ann.ensureIvfPqIndex(spark, d, nlist = 2, m = 4, ksub = 4,
+      iters = 3)
+    assert(Ann.ivfQuery(spark, ivfDir, qv, k = 3, nprobe = 1)
+      .collect().nonEmpty)
+    assert(Ann.ivfPqQuery(spark, d, pqDir, qv, k = 3, nprobe = 1)
+      .collect().nonEmpty)
+
+    writeVecs(d, clusteredVecs(seed = 2, id0 = 100L))
+    writeVecs(fresh, clusteredVecs(seed = 2, id0 = 100L))
+    assert(Ann.ensureIvfIndex(spark, d, nlist = 2, iters = 3) == ivfDir)
+    assert(Ann.ensureIvfPqIndex(spark, d, nlist = 2, m = 4, ksub = 4,
+      iters = 3) == pqDir)
+    val trained = Ann.trainIvfCentroids(spark, d, nlist = 2, iters = 3)
+    assert(Ann.loadIvfCentroids(spark, ivfDir).zip(trained)
+      .forall { case (a, b) => a.sameElements(b) })
+    val freshIvf = Ann.ensureIvfIndex(spark, fresh, nlist = 2, iters = 3)
+    val freshPq = Ann.ensureIvfPqIndex(spark, fresh, nlist = 2, m = 4,
+      ksub = 4, iters = 3)
+    val ivf = hits(Ann.ivfQuery(spark, ivfDir, qv, k = 3, nprobe = 1))
+    assert(ivf.nonEmpty && ivf.forall(_._1 >= 100L), s"got $ivf")
+    assert(ivf == hits(Ann.ivfQuery(spark, freshIvf, qv, k = 3, nprobe = 1)))
+    val pq = hits(Ann.ivfPqQuery(spark, d, pqDir, qv, k = 3, nprobe = 1))
+    assert(pq.nonEmpty && pq.forall(_._1 >= 100L), s"got $pq")
+    assert(pq ==
+      hits(Ann.ivfPqQuery(spark, fresh, freshPq, qv, k = 3, nprobe = 1)))
+  }
+
+  test("crash window: an IVF / IVF-PQ index with no marker and a " +
+      "truncated cells table is refused, then rebuilt whole") {
+    val d = java.nio.file.Files.createTempDirectory("graft_ivfcrash_").toString
+    writeVecs(d, clusteredVecs(seed = 3, id0 = 0L))
+    val qv = clusteredVecs(seed = 3, id0 = 0L).head._2
+    def ivf(): String = Ann.ensureIvfIndex(spark, d, nlist = 2, iters = 3)
+    def pq(): String = Ann.ensureIvfPqIndex(spark, d, nlist = 2, m = 4,
+      ksub = 4, iters = 3)
+    def queryIvf(dir: String) = hits(Ann.ivfQuery(spark, dir, qv, k = 8,
+      nprobe = 2))
+    def queryPq(dir: String) = hits(Ann.ivfPqQuery(spark, d, dir, qv, k = 8,
+      nprobe = 2, rerank = 0))
+    for ((ensure, query, what) <- Seq(
+        (() => ivf(), queryIvf _, "IVF"), (() => pq(), queryPq _, "IVF-PQ"))) {
+      val dir = ensure()
+      val before = query(dir)
+      assert(before.size == 8)
+      new java.io.File(s"$dir/_meta").delete()
+      val cells = new java.io.File(s"$dir/cells").listFiles()
+        .filter(_.getName.startsWith("cell="))
+      assert(cells.length == 2)
+      org.apache.commons.io.FileUtils.deleteDirectory(cells.head)
+      val e = intercept[IllegalStateException](query(dir))
+      assert(e.getMessage.startsWith(s"no $what index"), e.getMessage)
+      assert(ensure() == dir)
+      assert(query(dir) == before, s"$what rebuild is not whole")
+    }
   }
 
   test("simhash declarative 64-bit-sum aggregate ≡ the per-group closure " +
