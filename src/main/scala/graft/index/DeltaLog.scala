@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import Schema.Posting
+import Schema.{Posting, Stats}
 
 /** Merge-on-read delta log for incremental index maintenance.
   *
@@ -17,6 +17,10 @@ import Schema.Posting
   *   - `blocks/`    the same rows delta+varint-encoded (same bucketSize as
   *                  the base, so WAND aligns base and delta blocks)
   *   - `docs/`      new/replacing DocMeta rows (+ seq)
+  *   - `terms/`     signed df changes (termId, term, tlen, df), one row per
+  *                  termId whose df changed; only terms new at this seq
+  *                  carry their name and tlen
+  *   - `stats/`     one row of signed (docCount, totalTokens) changes
   *   - `removed/`   tombstones: (docId, seq) — "every version of docId
   *                  written BEFORE seq is dead"
   *   - `_committed` the commit marker (tiny file, created atomically via
@@ -26,7 +30,11 @@ import Schema.Posting
   * Liveness rule (read side): a row written at layer `r` (base = 0, delta
   * = its seq) is live iff `r >= lastTombstoneSeq(docId)` (0 when none).
   * A replaced doc keeps its stable docId: the tombstone at seq s kills the
-  * base/earlier rows, the seq-s rows survive (`s >= s`).
+  * base/earlier rows, the seq-s rows survive (`s >= s`). The dictionary
+  * and stats are summed instead ([[termsView]], [[statsView]]): the base
+  * `terms`/`stats` dirs each carry a stamp, the highest seq they already
+  * include, and only deltas above it are added. A delta without these
+  * tables (written before they existed) adds nothing.
   *
   * This is exactly Iceberg's merge-on-read shape (delete files + data
   * files + periodic compaction) expressed on plain parquet; on a real
@@ -45,8 +53,34 @@ object DeltaLog {
     s"${seqPath(dir, seq)}/_committed"
   def removedPath(dir: String, seq: Int) = s"${seqPath(dir, seq)}/removed"
 
-  private def fs(spark: SparkSession, dir: String) =
+  private[index] def fs(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Fully reads a small meta/marker file to EOF of the stream it opened,
+    * retrying ONCE on a transient ChecksumException or EOFException: the
+    * file:-scheme [[writeAtomicString]] deletes the stale `.crc` sidecar
+    * and ATOMIC_MOVEs the data as two separate steps, so a
+    * ChecksumFileSystem reader that opened the old crc just before the
+    * delete can verify NEW bytes against the OLD checksum exactly once —
+    * the retry re-opens with the post-move state (crc absent → raw read).
+    * The length comes from the open stream, not from a separate stat: a
+    * stat taken beside the open can describe the other side of a replace
+    * (and costs one more filesystem call per read). Every small-file
+    * reader in the index/ops layer goes through here.
+    */
+  private[graft] def readSmallBytes(
+      f: FileSystem, p: Path): Array[Byte] = {
+    def once(): Array[Byte] = {
+      val in = f.open(p)
+      try in.readAllBytes()
+      finally in.close()
+    }
+    try once()
+    catch {
+      case _: org.apache.hadoop.fs.ChecksumException |
+          _: java.io.EOFException => once()
+    }
+  }
 
   /** Atomic small-file write: temp + atomic-replace rename, so concurrent
     * readers see either the old content or the new — never a truncated
@@ -76,32 +110,6 @@ object DeltaLog {
     * consume each other's temp file — with a shared name, the loser's
     * fallback would DELETE the destination and then fail its rename.
     */
-  /** Fully reads a small meta/marker file to EOF of the stream it opened,
-    * retrying ONCE on a transient ChecksumException or EOFException: the
-    * file:-scheme [[writeAtomicString]] deletes the stale `.crc` sidecar
-    * and ATOMIC_MOVEs the data as two separate steps, so a
-    * ChecksumFileSystem reader that opened the old crc just before the
-    * delete can verify NEW bytes against the OLD checksum exactly once —
-    * the retry re-opens with the post-move state (crc absent → raw read).
-    * The length comes from the open stream, not from a separate stat: a
-    * stat taken beside the open can describe the other side of a replace
-    * (and costs one more filesystem call per read). Every small-file
-    * reader in the index/ops layer goes through here.
-    */
-  private[graft] def readSmallBytes(
-      f: FileSystem, p: Path): Array[Byte] = {
-    def once(): Array[Byte] = {
-      val in = f.open(p)
-      try in.readAllBytes()
-      finally in.close()
-    }
-    try once()
-    catch {
-      case _: org.apache.hadoop.fs.ChecksumException |
-          _: java.io.EOFException => once()
-    }
-  }
-
   private[graft] def writeAtomicString(
       f: FileSystem, path: String, content: String): Unit = {
     val dest = new Path(path)
@@ -145,6 +153,12 @@ object DeltaLog {
     }
   }
 
+  /** A small file holding one number; missing, empty or garbage → 0. */
+  private[index] def readNumber(f: FileSystem, p: Path): Long =
+    if (!f.exists(p)) 0L
+    else scala.util.Try(new String(readSmallBytes(f, p),
+      java.nio.charset.StandardCharsets.UTF_8).trim.toLong).getOrElse(0L)
+
   /** Highest seq folded into the base by [[Incremental.compact]]; seqs at
     * or below it are invisible to readers even while their dirs await
     * grace-period deletion (see [[clear]]).
@@ -160,25 +174,16 @@ object DeltaLog {
     * never correctness. Were adds untombstoned, both rows would read as
     * live and the doc would be double-materialized.
     *
-    * One documented hairline corner: the DISTRIBUTED-liveness WAND path
-    * routes tombstones by `docId / meta.bucketSize`, so if a lost marker
-    * re-exposes deltas whose blocks were stamped with a DIFFERENT
-    * bucketSize (the fold heals bucketSize as the corpus grows) while the
-    * tombstone set ALSO exceeds `graft.maxDriverTombstones`, a replaced
-    * doc's re-exposed old-generation rows can land in a bucket its
-    * tombstone is not routed to. This needs three independent failures at
-    * once (marker loss + bucketSize change in that very fold + >10M
-    * tombstones); the driver-map path — every configuration below the
-    * cap — filters by docId globally and is immune. ChaosSpec exercises
-    * marker loss and fold restarts under the normal path.
+    * One hairline corner: the DISTRIBUTED-liveness WAND path routes
+    * tombstones by `docId / meta.bucketSize`, so re-exposed deltas whose
+    * blocks carry a DIFFERENT bucketSize (the fold heals it) under a
+    * tombstone set past `graft.maxDriverTombstones` can miss their
+    * tombstone's bucket — three independent failures at once; the
+    * driver-map path filters by docId globally and is immune.
     */
   def compactedThrough(spark: SparkSession, dir: String): Int = {
-    val f = fs(spark, dir)
-    val p = new Path(compactedMarker(dir))
     val marker =
-      if (!f.exists(p)) 0
-      else scala.util.Try(new String(readSmallBytes(f, p),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toInt).getOrElse(0)
+      readNumber(fs(spark, dir), new Path(compactedMarker(dir))).toInt
     // redundant floor in meta.json ([[Incremental.compact]] records it
     // after every fold): losing EITHER file alone re-exposes nothing —
     // the derived add-tombstones keep even the both-lost case correct,
@@ -204,13 +209,10 @@ object DeltaLog {
     * in one rename.
     *
     * Back-compat: deltas committed by the pre-marker code have no
-    * `_committed` file — treating them as uncommitted would silently drop
-    * committed data (deleted docs resurrect) and then let nextSeq
-    * OVERWRITE their dirs. Those deltas do carry `removed/_SUCCESS`
-    * (written by the committer at JOB COMMIT, i.e. strictly after the
-    * tombstone data), so a seq also reads as committed on that job-commit
-    * artifact: exactly the alternative gate the visibility fix allows, and
-    * never true for a crashed/in-flight write.
+    * `_committed` file (dropping them would resurrect deleted docs and let
+    * nextSeq OVERWRITE their dirs), but carry `removed/_SUCCESS`, written
+    * at JOB COMMIT strictly after the tombstone data — never true for a
+    * crashed/in-flight write — so that also reads as committed.
     */
   def listSeqs(spark: SparkSession, dir: String): Seq[Int] = {
     val f = fs(spark, dir)
@@ -243,14 +245,11 @@ object DeltaLog {
     * The set unions the WRITTEN kill tombstones (`removed/`) with DERIVED
     * entries (docId, seq) from each delta's `docs/` table: every docId a
     * delta writes — docs merely ADDED included — reads as tombstoned at its
-    * seq. For an add this changes nothing in normal state (its only rows
-    * live at `_seq = s >= s`), but it upholds the invariant the compaction
-    * fold's restart/lost-marker safety rests on (see [[compactedThrough]]):
-    * were adds untombstoned, a re-exposed folded delta would read the add's
-    * folded layer-0 copy AND its delta rows as live. Deriving (instead of
-    * writing add rows into `removed/`) keeps the kill set pure for the
-    * compaction trigger and retrofits the invariant onto deltas committed
-    * by older writers.
+    * seq. For an add this changes nothing in normal state, but it upholds
+    * the invariant the fold's restart/lost-marker safety rests on (see
+    * [[compactedThrough]]). Deriving (instead of writing add rows into
+    * `removed/`) keeps the kill set pure for the compaction trigger and
+    * retrofits the invariant onto deltas committed by older writers.
     */
   def tombstonesDf(
       spark: SparkSession, dir: String, seqs: Seq[Int]): Option[DataFrame] =
@@ -266,9 +265,6 @@ object DeltaLog {
       sides.groupBy("docId").agg(max(col("seq")).cast("int").as("tombSeq"))
     }
 
-  def tombstonesDf(spark: SparkSession, dir: String): Option[DataFrame] =
-    tombstonesDf(spark, dir, listSeqs(spark, dir))
-
   /** WRITTEN kill tombstones only (replaced/removed docs — no derived add
     * entries), ungrouped (docId, seq). This is the read the compaction
     * TRIGGER wants: a pure-add delta kills nothing and must not drag the
@@ -280,10 +276,6 @@ object DeltaLog {
     else Some(spark.read
       .parquet(seqs.map(s => removedPath(dir, s)): _*)
       .select(col("docId"), col("seq")))
-
-  private[graft] def killTombstonesDf(
-      spark: SparkSession, dir: String): Option[DataFrame] =
-    killTombstonesDf(spark, dir, listSeqs(spark, dir))
 
   /** Driver-collected tombstones for the WAND decode filter. Bounded by
     * compaction (min(fraction·docCount, tombstoneAbsoluteCap) triggers a
@@ -299,9 +291,6 @@ object DeltaLog {
       case Some(t) => t.as[(Long, Int)].collect().toMap
     }
   }
-
-  def tombstoneMap(spark: SparkSession, dir: String): Map[Long, Int] =
-    tombstoneMap(spark, dir, listSeqs(spark, dir))
 
   private def basePostings(spark: SparkSession, dir: String): DataFrame = {
     val g = IndexBuilder.readMeta(spark, dir)("postingGroups").toInt
@@ -362,16 +351,12 @@ object DeltaLog {
       .getOrElse(10000000L)
 
   /** Applies the liveness rule to a frame carrying a `_seq` layer column.
-    * The tombstone side is usually compaction-bounded small and broadcast —
-    * but a maintenance lull under heavy churn can leave more tombstones
-    * than the driver can collect (a broadcast build side IS a driver
-    * collect, hard-capped at 8 GB by Spark). Gate on the same
-    * `graft.maxDriverTombstones` threshold the query handles use
-    * ([[graft.query.IndexHandles]] tombOverflow): the row count comes from
-    * parquet FOOTERS (driver-side metadata read, no job), and past the cap
-    * the hint is dropped so Spark picks a shuffled SMJ/SHJ — exactly how
-    * the overflowed compaction that is supposed to CLEAR the lull must
-    * read its own input.
+    * The tombstone side is usually small and broadcast — but a maintenance
+    * lull under heavy churn can leave more tombstones than the driver can
+    * collect (a broadcast build side IS a driver collect). Past the same
+    * `graft.maxDriverTombstones` gate the query handles use (row count from
+    * parquet FOOTERS, no job) the hint is dropped so Spark picks a shuffled
+    * join — how the overflowed compaction that CLEARS the lull reads.
     */
   def withLiveness(
       spark: SparkSession, dir: String, layers: DataFrame,
@@ -386,10 +371,6 @@ object DeltaLog {
           .filter(col("_seq") >= coalesce(col("tombSeq"), lit(0)))
           .drop("_seq", "tombSeq")
     }
-
-  def withLiveness(
-      spark: SparkSession, dir: String, layers: DataFrame): DataFrame =
-    withLiveness(spark, dir, layers, listSeqs(spark, dir))
 
   /** Live postings across base + deltas: (termId, docId, tf, docLen). */
   def postingsView(
@@ -445,6 +426,91 @@ object DeltaLog {
       .select(docCols.map(col): _*))
   }
 
+  /** The stamp of a base `terms`/`stats` dir: the highest delta seq the
+    * base includes (missing → 0), written into the staging dir before the
+    * swap so it moves with the data. The views add only deltas above it,
+    * so neither a restarted fold nor a reader between a fold's base swap
+    * and [[clear]] counts a delta twice.
+    */
+  private def stampPath(table: String) = s"$table/_through"
+
+  private[index] def writeStamp(
+      spark: SparkSession, table: String, seq: Int): Unit =
+    writeAtomicString(fs(spark, table), stampPath(table), seq.toString)
+
+  /** The `name` tables `seqs` wrote, above the stamp of `stampOf`. */
+  private def deltaTables(spark: SparkSession, dir: String, seqs: Seq[Int],
+      name: String, stampOf: Option[String]): Seq[String] = {
+    val f = fs(spark, dir)
+    val through = stampOf.fold(0L)(t => readNumber(f, new Path(stampPath(t))))
+    seqs.filter(_ > through).map(s => s"${seqPath(dir, s)}/$name")
+      .filter(t => f.exists(new Path(t)))
+  }
+
+  /** The dictionary readers see, (termId, term, df, tlen): the base plus
+    * the signed df changes of the deltas above its stamp. The changes are
+    * summed on the driver — O(batch × visible seqs), bounded by compaction
+    * — and applied to the base in one narrow pass, with no shuffle: terms
+    * new in a delta are appended, rows whose df falls to 0 are dropped.
+    * With no such delta this is the base read as written.
+    */
+  def termsView(spark: SparkSession, dir: String, seqs: Seq[Int]): DataFrame = {
+    import spark.implicits._
+    val table = IndexBuilder.termsPath(dir)
+    val base = spark.read.parquet(table)
+    val deltas = deltaTables(spark, dir, seqs, "terms", Some(table))
+    if (deltas.isEmpty) return base
+    val changes = spark.read.parquet(deltas: _*)
+      .select("termId", "term", "tlen", "df")
+      .as[(Long, String, Option[Int], Long)].collect()
+      .groupMapReduce(_._1)(c => (c._2, c._3, c._4))((a, b) =>
+        (Option(a._1).getOrElse(b._1), a._2.orElse(b._2), a._3 + b._3))
+    val tlen = if (base.columns.contains("tlen")) col("tlen")
+      else octet_length(col("term"))
+    base.select(col("termId"), col("term"), col("df"), tlen.as("tlen"))
+      .as[(Long, String, Long, Int)]
+      .mapPartitions(_.flatMap { case (id, t, df, len) =>
+        Some((id, t, df + changes.get(id).fold(0L)(_._3), len))
+          .filter(_._3 > 0)
+      })
+      .union(changes.toSeq.collect { case (id, (t, len, d))
+        if t != null && d > 0 => (id, t, d, len.getOrElse(0)) }.toDS())
+      .toDF("termId", "term", "df", "tlen")
+  }
+
+  def termsView(spark: SparkSession, dir: String): DataFrame =
+    termsView(spark, dir, listSeqs(spark, dir))
+
+  /** (docCount, totalTokens) readers see: the base row plus the signed
+    * changes of the deltas above its stamp.
+    */
+  def statsView(spark: SparkSession, dir: String, seqs: Seq[Int]): Stats = {
+    import spark.implicits._
+    val table = IndexBuilder.statsPath(dir)
+    val deltas = deltaTables(spark, dir, seqs, "stats", Some(table))
+    if (deltas.isEmpty) spark.read.parquet(table).as[Stats].head()
+    else spark.read.parquet(table +: deltas: _*)
+      .agg(sum("docCount").cast("long").as("docCount"),
+        sum("totalTokens").cast("long").as("totalTokens"))
+      .as[Stats].head()
+  }
+
+  def statsView(spark: SparkSession, dir: String): Stats =
+    statsView(spark, dir, listSeqs(spark, dir))
+
+  /** Every termId of the base and the visible terms deltas, zero-df rows
+    * included: new terms are numbered above all of them, as
+    * [[docsAllLayers]] does for docs — a dropped term keeps its base row
+    * until the fold, and reusing its id would give one termId two names.
+    */
+  def termIdsAllLayers(
+      spark: SparkSession, dir: String, seqs: Seq[Int]): DataFrame = {
+    val base = spark.read.parquet(IndexBuilder.termsPath(dir)).select("termId")
+    val deltas = deltaTables(spark, dir, seqs, "terms", None)
+    if (deltas.isEmpty) base
+    else base.union(spark.read.parquet(deltas: _*).select("termId"))
+  }
+
   /** Delta blocks (TermBlock columns + `seq`); None when no deltas. */
   def deltaBlocks(
       spark: SparkSession, dir: String, seqs: Seq[Int]): Option[DataFrame] =
@@ -452,13 +518,10 @@ object DeltaLog {
     else Some(spark.read
       .parquet(seqs.map(s => s"${seqPath(dir, s)}/blocks"): _*))
 
-  def deltaBlocks(spark: SparkSession, dir: String): Option[DataFrame] =
-    deltaBlocks(spark, dir, listSeqs(spark, dir))
-
   /** Writes one delta's DATA tables (postings + their encoded blocks +
-    * doc rows). NOT visible to readers until [[commitDelta]] writes the
-    * `_committed` marker; a crash in between leaves an invisible
-    * half-written dir that the retry overwrites.
+    * doc rows + df and stats changes). NOT visible to readers until
+    * [[commitDelta]] writes the `_committed` marker; a crash in between
+    * leaves an invisible half-written dir that the retry overwrites.
     */
   def writeDeltaData(
       spark: SparkSession,
@@ -466,6 +529,8 @@ object DeltaLog {
       seq: Int,
       postingsAdd: DataFrame,
       docsAdd: DataFrame,
+      termsDelta: DataFrame,
+      statsDelta: Stats,
       blockSize: Int,
       bucketSize: Long,
       parts: Int): Unit = {
@@ -493,13 +558,17 @@ object DeltaLog {
     docsAdd.select(docCols.map(col): _*)
       .withColumn("seq", lit(seq))
       .write.mode("overwrite").parquet(s"$p/docs")
+    termsDelta.select("termId", "term", "tlen", "df")
+      .write.mode("overwrite").parquet(s"$p/terms")
+    spark.createDataFrame(Seq(statsDelta))
+      .write.mode("overwrite").parquet(s"$p/stats")
   }
 
   /** COMMITS seq: writes the tombstone table, then — strictly after the
     * parquet job has committed — creates the `_committed` marker file
     * atomically (temp + rename). Marker existence IS commit visibility
-    * ([[listSeqs]]); everything ordered after it in [[Incremental.update]]
-    * (terms/stats swap, meta) is reconstructible from durable state by
+    * ([[listSeqs]]); the meta refresh ordered after it in
+    * [[Incremental.update]] is rebuilt from the views by
     * [[Incremental.recover]].
     */
   def commitDelta(

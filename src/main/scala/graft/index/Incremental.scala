@@ -14,32 +14,26 @@ import Schema._
   *
   *   - docIds stay STABLE for surviving urls; new urls get ids above the
   *     old max, ranked by url (deterministic);
-  *   - `terms.df` is updated by delta aggregation (±1 per unique term per
+  *   - `terms.df` changes by a signed delta (±1 per unique term per
   *     changed doc), not a full recount; terms reaching df = 0 are dropped
   *     (the reference keeps zero-df `gtf` entries, which NaN-poison its own
   *     TF-IDF scores — model.rs:169 divides by 0 — so the rebuild
   *     deliberately cleans them; SURVEY.md §2.6.5);
-  *   - postings/blocks/docs changes are committed as a MERGE-ON-READ delta
-  *     ([[DeltaLog]]): one small sequenced directory of added rows + encoded
-  *     blocks + tombstones. Base posting files are NOT rewritten — a 1-doc
-  *     update writes O(1 doc) bytes, not O(index). Deltas fold into the
-  *     base when [[IndexBuilder.BuildConf.deltaCompactEvery]] accumulate or
-  *     tombstones exceed `tombstoneCompactFraction` of the corpus
-  *     ([[compact]]);
-  *   - terms + stats are still rewritten whole: they are the O(vocabulary)
-  *     and O(1) metadata tables, ~1000× smaller than postings — the delta
-  *     machinery would cost more than it saves there. They participate in
-  *     the commit protocol through VERSIONED side dirs (__v<seq>) swapped
-  *     in only after the commit marker, so a crash can never leave updated
-  *     df counts next to an invisible delta (which a retry would then
-  *     double-apply);
+  *   - every change is committed as a MERGE-ON-READ delta ([[DeltaLog]]):
+  *     one small sequenced directory of added rows + encoded blocks + doc
+  *     rows + signed df and stats changes + tombstones. No base file is
+  *     rewritten — a 1-doc update writes O(1 doc) bytes, not O(index) or
+  *     O(vocabulary). Readers see base + deltas through the views; deltas
+  *     fold into the base when [[IndexBuilder.BuildConf.deltaCompactEvery]]
+  *     accumulate or tombstones exceed `tombstoneCompactFraction` of the
+  *     corpus ([[compact]]);
   *   - "save only if changed" (S9): an empty delta writes nothing.
   *
   * On Iceberg this maps to MERGE INTO / positional-delete files with
   * snapshot isolation; on plain parquet the delta commit is made atomic by
   * writing the tombstone table last (= the commit marker), with
-  * [[recover]] rolling a crashed commit's post-marker steps forward from
-  * durable state.
+  * [[recover]] rebuilding a crashed commit's post-marker meta from the
+  * views.
   */
 object Incremental {
 
@@ -74,9 +68,9 @@ object Incremental {
         DeltaLog.listSeqs(spark, indexDir).nonEmpty)
       compact(spark, indexDir, conf)
 
-    val docs = DeltaLog.docsView(spark, indexDir)
-    val termsOld = spark.read.parquet(IndexBuilder.termsPath(indexDir))
-    val postingsOld = DeltaLog.postingsView(spark, indexDir)
+    val seqs = DeltaLog.listSeqs(spark, indexDir)
+    val docs = DeltaLog.docsView(spark, indexDir, seqs)
+    val postingsOld = DeltaLog.postingsView(spark, indexDir, seqs)
       .select($"termId", $"docId", $"tf", $"docLen")
 
     // last-write-wins per-url dedup, same as build(): a snapshot with two
@@ -184,17 +178,38 @@ object Incremental {
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
 
+    // stats change, and the report counts: new docs are the ids above the
+    // old max; every affected docId is a live doc
+    val (deltaTokens, deltaDocs, nAdded) = docsDelta
+      .agg(coalesce(sum($"docLen"), lit(0L)), count(lit(1)),
+        count(when($"docId" > maxDocId, 1)))
+      .as[(Long, Long, Long)].head()
+    val (removedTokens, nAffected) = docs.join(affectedOld, "docId")
+      .agg(coalesce(sum($"docLen"), lit(0L)), count(lit(1)))
+      .as[(Long, Long)].head()
+    if (nAffected == 0 && nAdded == 0) {
+      // only perpetually-malformed stale docs → nothing actually changed
+      // (reference: parse error → continue, processed not incremented,
+      // save skipped — main.rs:196-202, 267-272)
+      Seq(ftDeltaRaw, docsDelta, affectedOld).foreach(_.unpersist())
+      assigned.release()
+      return UpdateReport(0, 0, 0, changed = false)
+    }
+    val statsDelta =
+      Stats(deltaDocs - nAffected, deltaTokens - removedTokens)
+
     // termId assignment for brand-new terms
+    val termsOld = DeltaLog.termsView(spark, indexDir, seqs)
     val termDeltaNames = ftDelta.select($"term").distinct()
       .join(termsOld.select($"term"), Seq("term"), "left_anti")
-    val maxTermId = termsOld.agg(coalesce(max($"termId"), lit(-1L)))
-      .as[Long].collect().headOption.getOrElse(-1L)
+    val maxTermId = DeltaLog.termIdsAllLayers(spark, indexDir, seqs)
+      .agg(coalesce(max($"termId"), lit(-1L))).as[Long].head()
     val newTermIds = DenseId.assign(spark,
       termDeltaNames.select($"term".as("value")).as[String],
       conf.partitions, idName = "newTid", keyName = "term")
-    val termIdMap = termsOld.select($"term", $"termId")
+    val termIdMap = termsOld.select($"term", $"termId", $"df".as("dfOld"))
       .unionByName(newTermIds.df.select($"term",
-        ($"newTid" + lit(maxTermId + 1)).as("termId")))
+        ($"newTid" + lit(maxTermId + 1)).as("termId"), lit(0L).as("dfOld")))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     // postings delta rows
@@ -205,139 +220,97 @@ object Incremental {
         $"docLen".cast("int").as("docLen"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // df delta: -1 per (term, removed-or-stale doc), +1 per added posting
-    val removedPostings = postingsOld
-      .join(affectedOld, "docId")
+    // df change: -1 per (term, removed-or-stale doc), +1 per added posting.
+    // A term is new iff its old df is 0 (the view holds only df > 0)
+    val dfChange = postingsOld.join(affectedOld, "docId")
+      .groupBy($"termId").agg(count(lit(1)).as("minus"))
+      .join(postingsAdd.groupBy($"termId").agg(count(lit(1)).as("plus")),
+        Seq("termId"), "full")
+      .join(termIdMap.select($"termId", $"term", $"dfOld"), Seq("termId"),
+        "left")
+      .select($"termId", $"term", coalesce($"dfOld", lit(0L)).as("dfOld"),
+        coalesce($"minus", lit(0L)).as("minus"),
+        coalesce($"plus", lit(0L)).as("plus"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val dfMinus = removedPostings.groupBy($"termId")
-      .agg(count(lit(1)).as("minus"))
-    val dfPlus = postingsAdd.groupBy($"termId")
-      .agg(count(lit(1)).as("plus"))
-    val termsNew = termIdMap
-      .join(termsOld.select($"termId", $"df"), Seq("termId"), "left")
-      .join(dfMinus, Seq("termId"), "left")
-      .join(dfPlus, Seq("termId"), "left")
-      .select($"termId", $"term",
-        (coalesce($"df", lit(0L)) - coalesce($"minus", lit(0L)) +
-          coalesce($"plus", lit(0L))).as("df"),
-        octet_length($"term").as("tlen"))
-      .filter($"df" > 0)
-
-    val stats = spark.read.parquet(IndexBuilder.statsPath(indexDir))
-      .as[Stats].head()
-    val removedLens = docs.join(affectedOld, "docId")
-      .agg(coalesce(sum($"docLen"), lit(0L)), count(lit(1)))
-      .as[(Long, Long)].head()
-    val addedLens = docsDelta
-      .agg(coalesce(sum($"docLen"), lit(0L)), count(lit(1)))
-      .as[(Long, Long)].head()
-    val statsNew = Stats(
-      stats.docCount - removedLens._2 + addedLens._2,
-      stats.totalTokens - removedLens._1 + addedLens._1)
+    val newName = when($"dfOld" === 0L, $"term")
 
     val meta = IndexBuilder.readMeta(spark, indexDir)
     val bucketSize = math.max(1L, meta("bucketSize").toLong)
 
-    // Materialize EVERYTHING derived from tables this update overwrites
-    // (terms, stats) or that the delta write re-reads, before any write —
-    // plans capture file listings at read() time, so a post-swap
-    // re-execution would hit deleted files.
-    val nAdded = withNew.count()
-    val nReindexed = withOld.count()
-    val nAffected = affectedOld.count()
-    if (nAffected == 0 && nAdded == 0) {
-      // only perpetually-malformed stale docs → nothing actually changed
-      // (reference: parse error → continue, processed not incremented,
-      // save skipped — main.rs:196-202, 267-272)
-      Seq(ftDeltaRaw, docsDelta, affectedOld, termIdMap, postingsAdd,
-        removedPostings).foreach(_.unpersist())
-      assigned.release()
-      newTermIds.release()
-      return UpdateReport(0, 0, 0, changed = false)
-    }
-    docsDelta.count()
-    termIdMap.count()
-    val nPostingsAdd = postingsAdd.count()
-    val nPostingsRemoved = removedPostings.count()
-    val termsNewMat = termsNew.persist(StorageLevel.MEMORY_AND_DISK)
-    val termCountNew = termsNewMat.count()
-
     // ---- writes (commit protocol; [[recover]] is its crash half):
-    //   1. delta DATA tables (postings/blocks/docs) — invisible until 3
-    //   2. terms/stats to VERSIONED side dirs (__v<seq>) — invisible
-    //   3. tombstone table = THE commit marker (DeltaLog.commitDelta)
-    //   4. swap the versioned terms/stats into place
-    //   5. meta refresh
-    // A crash before 3 leaves the old index fully intact (the retry
+    //   1. delta tables (postings/blocks/docs, df and stats changes) —
+    //      invisible until 2
+    //   2. tombstone table, then the `_committed` marker
+    //      (DeltaLog.commitDelta)
+    //   3. meta refresh
+    // No base table is written, so no read plan can outlive its files. A
+    // crash before 2 leaves the old index fully intact (the retry
     // recomputes everything from unchanged state and overwrites the
-    // orphans); a crash after 3 is rolled forward by recover() — so the
-    // old ordering's failure mode (terms swapped, delta invisible, retry
-    // double-applying df adjustments) cannot occur.
+    // orphans); a crash after 2 leaves stale meta, which recover()
+    // rebuilds from the views.
     val seq = DeltaLog.nextSeq(spark, indexDir)
     DeltaLog.writeDeltaData(spark, indexDir, seq,
       postingsAdd = postingsAdd,
       docsAdd = docsDelta.select($"docId", $"url", $"warc_ts", $"docLen"),
+      termsDelta = dfChange.filter($"plus" =!= $"minus")
+        .select($"termId", newName.as("term"),
+          octet_length(newName).as("tlen"), ($"plus" - $"minus").as("df")),
+      statsDelta = statsDelta,
       blockSize = meta("blockSize").toInt,
       bucketSize = bucketSize,
       parts = math.max(1, math.min(4,
         conf.partitions / math.max(1, meta("postingGroups").toInt))))
-    termsNewMat.write.mode("overwrite")
-      .parquet(versionedPath(IndexBuilder.termsPath(indexDir), seq))
-    Seq(statsNew).toDF().write.mode("overwrite")
-      .parquet(versionedPath(IndexBuilder.statsPath(indexDir), seq))
-    // the written tombstone table holds only KILLS (replaced/removed docs);
-    // docs merely ADDED at this seq are tombstoned too, but DERIVED at read
-    // time from this delta's docs/ table ([[DeltaLog.tombstonesDf]] unions
-    // removed/ with docs-written (docId, seq)) — that derived entry is what
-    // makes the compaction fold IDEMPOTENT for adds (a crashed compact()
-    // restart, or a lost _compacted marker re-exposing folded deltas, would
-    // otherwise read an added doc's folded layer-0 copy AND its delta rows
-    // as live — permanent double-materialization). Deriving instead of
-    // writing keeps the removed/ table = kill set (the compaction trigger
-    // below counts it) and fixes pre-existing indexes for free.
+    // the tombstone table holds only KILLS; docs ADDED at this seq are
+    // tombstoned too, derived at read time from this delta's docs/ table
+    // ([[DeltaLog.tombstonesDf]]) — what keeps the fold idempotent for adds
+    // while removed/ stays the kill set the compaction trigger counts
     DeltaLog.commitDelta(spark, indexDir, seq, tombstones = affectedOld)
-    swapVersioned(spark, indexDir, seq)
 
     // meta refresh: handle caches validate against meta.json, and the
-    // driver-dict / cache sizing heuristics read these counts
+    // driver-dict / cache sizing heuristics read these counts. Postings
+    // added come from the written delta's footers, removed ones from the
+    // df-minus sum; a term is gained when its df leaves 0, lost when it
+    // reaches 0
+    val (nPostingsRemoved, termsGained, termsLost) = dfChange
+      .agg(coalesce(sum($"minus"), lit(0L)),
+        count(when($"dfOld" === 0L && $"plus" > $"minus", 1)),
+        count(when($"dfOld" > 0L && $"dfOld" + $"plus" - $"minus" <= 0L, 1)))
+      .as[(Long, Long, Long)].head()
+    val nPostingsAdd = DeltaLog.parquetRows(spark,
+      Seq(s"${DeltaLog.seqPath(indexDir, seq)}/postings"))
+    val statsOld = DeltaLog.statsView(spark, indexDir, seqs)
+    val statsNew = Stats(statsOld.docCount + statsDelta.docCount,
+      statsOld.totalTokens + statsDelta.totalTokens)
     IndexBuilder.updateMeta(spark, indexDir, Map(
       "docCount" -> statsNew.docCount.toString,
       "totalTokens" -> statsNew.totalTokens.toString,
-      "termCount" -> termCountNew.toString,
+      "termCount" ->
+        (meta("termCount").toLong + termsGained - termsLost).toString,
       "postingCount" ->
         (meta("postingCount").toLong - nPostingsRemoved + nPostingsAdd)
           .toString,
       "deltaSeq" -> seq.toString))
 
     Seq(ftDeltaRaw, docsDelta, affectedOld, termIdMap, postingsAdd,
-      removedPostings, termsNewMat).foreach(_.unpersist())
+      dfChange).foreach(_.unpersist())
     assigned.release()
     newTermIds.release()
     graft.query.IndexHandles.invalidate(indexDir) // cached tables are stale
 
-    // ---- compaction policy: fold deltas into the base when enough have
-    // accumulated or tombstones grew past a fraction of the corpus -------
-    // KILL tombstones only: a pure-add delta must not drag the fold
-    // forward (the derived add-tombstones kill nothing in normal reads)
-    val tombCount = DeltaLog.killTombstonesDf(spark, indexDir)
+    // ---- compaction policy: fold deltas into the base when enough VISIBLE
+    // deltas have accumulated (seqs are monotonic across compactions), or
+    // KILL tombstones (a pure add kills nothing) grew past min(fraction of
+    // the corpus — read amplification —, absolute cap — the tombstone
+    // working set), or the DERIVED liveness set (kills + add-tombstones,
+    // what the query handles collect) crossed the cap the handles gate on:
+    // a pure-add bulk ingest must not pin queries on the distributed path
+    // for up to deltaCompactEvery more updates (footer counts, no job)
+    val visibleSeqs = DeltaLog.listSeqs(spark, indexDir)
+    val tombCount = DeltaLog.killTombstonesDf(spark, indexDir, visibleSeqs)
       .map(_.select($"docId").distinct().count()).getOrElse(0L)
-    // seqs are monotonic ACROSS compactions (compacted dirs linger through
-    // the deletion grace), so the trigger counts visible uncompacted
-    // deltas, not the raw seq number
-    // fraction bounds read amplification; the absolute cap bounds the
-    // tombstone working set itself (driver map / broadcast on the query
-    // path) — min() so whichever is smaller fires first
     val tombTrigger = math.min(
       conf.tombstoneCompactFraction * math.max(1L, statsNew.docCount),
       conf.tombstoneAbsoluteCap.toDouble)
-    // the DERIVED liveness working set (kills + add-tombstones from the
-    // delta docs tables) is what the query handles collect/broadcast;
-    // past graft.maxDriverTombstones they degrade to the distributed
-    // path. A pure-add bulk ingest grows that set with ZERO kills, so a
-    // kill-only trigger would pin every query on the slow path for up to
-    // deltaCompactEvery more updates — fold as soon as the derived set
-    // crosses the same cap the handles gate on (footer counts, no job).
-    val visibleSeqs = DeltaLog.listSeqs(spark, indexDir)
     val derivedRows = DeltaLog.tombRowCount(spark, indexDir, visibleSeqs)
     val shouldCompact =
       visibleSeqs.size >= conf.deltaCompactEvery ||
@@ -347,7 +320,7 @@ object Incremental {
 
     UpdateReport(
       added = nAdded,
-      reindexed = nReindexed,
+      reindexed = deltaDocs - nAdded,
       removed = nRemoved,
       changed = true,
       compacted = shouldCompact)
@@ -356,8 +329,10 @@ object Incremental {
   /** Folds all deltas into the base tables: live postings are re-range-
     * partitioned and rewritten per group (concurrently — groups are
     * independent), blocks re-encoded, the docs table rewritten live-only,
-    * and the delta log cleared. Cost is one base rewrite amortized over
-    * `deltaCompactEvery` updates — the Iceberg-compaction analog.
+    * the terms and stats views written as the new bases (stamped with the
+    * highest seq folded), and the delta log cleared. Cost is one base
+    * rewrite amortized over `deltaCompactEvery` updates — the
+    * Iceberg-compaction analog.
     */
   def compact(
       spark: SparkSession,
@@ -365,34 +340,31 @@ object Incremental {
       conf: IndexBuilder.BuildConf = IndexBuilder.BuildConf()): Unit = {
     import spark.implicits._
     recover(spark, indexDir) // a crashed commit must be rolled forward first
-    if (DeltaLog.listSeqs(spark, indexDir).isEmpty) return
+    val seqs = DeltaLog.listSeqs(spark, indexDir)
+    if (seqs.isEmpty) return
     val meta = IndexBuilder.readMeta(spark, indexDir)
     val g = meta("postingGroups").toInt
     val blockSize = meta("blockSize").toInt
     val perGroupParts = math.max(1, conf.partitions / g)
 
     // materialize the live views BEFORE overwriting the base files they read
-    val live = DeltaLog.postingsView(spark, indexDir)
+    val live = DeltaLog.postingsView(spark, indexDir, seqs)
       .select($"termId", $"docId", $"tf".cast("int").as("tf"),
         $"docLen".cast("int").as("docLen"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     live.count()
-    val docsLive = DeltaLog.docsView(spark, indexDir)
+    val docsLive = DeltaLog.docsView(spark, indexDir, seqs)
       .persist(StorageLevel.MEMORY_AND_DISK)
     docsLive.count()
 
-    // re-derive bucketSize from the LIVE docId range: an index
-    // bootstrapped from an empty snapshot carries a degenerate bucketSize
-    // (docCount was 0 → every posting its own block), and a corpus grown
-    // far past its build size needs coarser buckets. Compaction re-encodes
-    // every block anyway, so this is the free place to heal it — and the
-    // only safe one: bucketSize must be uniform across all blocks WAND
-    // aligns, which holds exactly when base is rewritten and deltas
-    // cleared together. The chosen value is durably recorded as a
-    // _compacting INTENT before any base file changes: a crashed
-    // compaction restarts (same value, idempotent fold) instead of leaving
-    // some groups encoded with the new bucketSize while meta still
-    // advertises the old one to future delta writers.
+    // re-derive bucketSize from the LIVE docId range (an index bootstrapped
+    // from an empty snapshot carries a degenerate one; a grown corpus needs
+    // coarser buckets). The fold is the only safe place: bucketSize must be
+    // uniform across all blocks WAND aligns, which holds exactly when base
+    // is rewritten and deltas cleared together. The value is recorded as a
+    // _compacting INTENT before any base file changes, so a crashed fold
+    // restarts with the same value instead of leaving some groups encoded
+    // with a bucketSize meta does not advertise to future delta writers.
     val bucketSize = readCompactingIntent(spark, indexDir).getOrElse {
       val queryBuckets = meta.get("queryBuckets").map(_.toInt)
         .getOrElse(conf.queryBuckets)
@@ -411,18 +383,28 @@ object Incremental {
         .repartitionByRange(perGroupParts, $"termId", $"docId")
         .sortWithinPartitions($"termId", $"docId")
         .persist(StorageLevel.MEMORY_AND_DISK)
-      writeTemp(spark, newGrp,
-        s"${IndexBuilder.postingsPath(indexDir)}/group=$grp")
+      writeTemp(spark, s"${IndexBuilder.postingsPath(indexDir)}/group=$grp")(
+        newGrp.write.mode("overwrite").parquet(_))
       val blocks = spark.read
         .parquet(s"${IndexBuilder.postingsPath(indexDir)}/group=$grp")
         .as[Posting]
         .mapPartitions(it => Blocks.encode(it, blockSize, bucketSize))
-      writeTemp(spark, blocks.toDF(),
-        s"${IndexBuilder.blocksPath(indexDir)}/group=$grp")
+      writeTemp(spark, s"${IndexBuilder.blocksPath(indexDir)}/group=$grp")(
+        blocks.write.mode("overwrite").parquet(_))
       newGrp.unpersist()
       ()
     }))
-    writeTemp(spark, docsLive, IndexBuilder.docsPath(indexDir))
+    writeTemp(spark, IndexBuilder.docsPath(indexDir))(
+      docsLive.write.mode("overwrite").parquet(_))
+    // terms and stats: each view is staged, stamped and swapped with its
+    // data, so a restarted fold or a reader before clear() adds no delta twice
+    val stats = Seq(DeltaLog.statsView(spark, indexDir, seqs)).toDF()
+    writeTemp(spark, IndexBuilder.termsPath(indexDir))(
+      IndexBuilder.writeTermsBase(spark,
+        DeltaLog.termsView(spark, indexDir, seqs), _, conf.partitions / 4,
+        seqs.last))
+    writeTemp(spark, IndexBuilder.statsPath(indexDir))(
+      IndexBuilder.writeStatsBase(spark, stats, _, seqs.last))
     DeltaLog.clear(spark, indexDir)
     // the compacted floor is recorded REDUNDANTLY here: meta.json and the
     // _compacted marker each alone carry it (compactedThrough takes the
@@ -438,135 +420,70 @@ object Incremental {
     graft.query.IndexHandles.invalidate(indexDir)
   }
 
-  private def compactingIntentPath(dir: String) = s"$dir/_compacting"
+  private def intent(spark: SparkSession, dir: String) =
+    (DeltaLog.fs(spark, dir), new org.apache.hadoop.fs.Path(s"$dir/_compacting"))
 
   private[index] def readCompactingIntent(
       spark: SparkSession, indexDir: String): Option[Long] = {
-    val f = hadoopFs(spark, indexDir)
-    val p = new org.apache.hadoop.fs.Path(compactingIntentPath(indexDir))
-    if (!f.exists(p)) return None
-    scala.util.Try(new String(DeltaLog.readSmallBytes(f, p),
-      java.nio.charset.StandardCharsets.UTF_8).trim.toLong).toOption
+    val (f, p) = intent(spark, indexDir)
+    Some(DeltaLog.readNumber(f, p)).filter(_ > 0)
   }
 
   private[index] def writeCompactingIntent(
-      spark: SparkSession, indexDir: String, bucketSize: Long): Unit =
-    DeltaLog.writeAtomicString(hadoopFs(spark, indexDir),
-      compactingIntentPath(indexDir), bucketSize.toString)
+      spark: SparkSession, indexDir: String, bucketSize: Long): Unit = {
+    val (f, p) = intent(spark, indexDir)
+    DeltaLog.writeAtomicString(f, p.toString, bucketSize.toString)
+  }
 
   private def dropCompactingIntent(
       spark: SparkSession, indexDir: String): Unit = {
-    val f = hadoopFs(spark, indexDir)
-    val p = new org.apache.hadoop.fs.Path(compactingIntentPath(indexDir))
+    val (f, p) = intent(spark, indexDir)
     if (f.exists(p)) f.delete(p, false)
   }
 
-  private def hadoopFs(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Overwrite a table that the plan also READS: stage to a sibling temp
-    * dir, then swap (parquet has no snapshot isolation — Iceberg would
-    * commit atomically instead). The staging dir is UNDERSCORE-prefixed
-    * (`_tmp_group=N`, not `group=N__tmp`): Spark's file listing skips
-    * underscore paths, so a concurrent handle doing partition discovery on
-    * postingsPath/blocksPath can never list the half-written dir and
-    * corrupt `group` partition-column inference (or trip on its
-    * `_temporary` contents).
+  /** Overwrite a table that the plan also READS: `write` stages it to a
+    * sibling temp dir, then it is swapped in (parquet has no snapshot
+    * isolation — Iceberg would commit atomically instead). The staging dir
+    * is UNDERSCORE-prefixed (`_tmp_group=N`, not `group=N__tmp`): Spark's
+    * file listing skips underscore paths, so a concurrent handle doing
+    * partition discovery on postingsPath/blocksPath can never list the
+    * half-written dir and corrupt `group` partition-column inference (or
+    * trip on its `_temporary` contents).
     */
-  private def writeTemp(
-      spark: SparkSession,
-      df: DataFrame,
-      dest: String): Unit = {
+  private def writeTemp(spark: SparkSession, dest: String)(
+      write: String => Unit): Unit = {
     val destPath = new org.apache.hadoop.fs.Path(dest)
-    val fs = destPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = DeltaLog.fs(spark, dest)
     val tmp = new org.apache.hadoop.fs.Path(
       destPath.getParent, "_tmp_" + destPath.getName)
-    df.write.mode("overwrite").parquet(tmp.toString)
-    swapInto(fs, tmp, destPath)
+    write(tmp.toString)
+    if (fs.exists(destPath)) fs.delete(destPath, true)
+    fs.rename(tmp, destPath)
   }
 
-  private def versionedPath(dest: String, seq: Int): String =
-    s"${dest}__v$seq"
-
-  private def swapInto(
-      fs: org.apache.hadoop.fs.FileSystem,
-      src: org.apache.hadoop.fs.Path,
-      dest: org.apache.hadoop.fs.Path): Unit = {
-    if (fs.exists(dest)) fs.delete(dest, true)
-    fs.rename(src, dest)
-  }
-
-  /** Step 4 of the commit protocol: move the seq's versioned terms/stats
-    * into place. Idempotent — a missing versioned dir means that table was
-    * already swapped.
-    */
-  private def swapVersioned(
-      spark: SparkSession, indexDir: String, seq: Int): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(IndexBuilder.termsPath(indexDir), IndexBuilder.statsPath(indexDir))
-      .foreach { dest =>
-        val v = new org.apache.hadoop.fs.Path(versionedPath(dest, seq))
-        if (fs.exists(v)) swapInto(fs, v, new org.apache.hadoop.fs.Path(dest))
-      }
-  }
-
-  /** Crash half of the delta commit protocol: rolls a crashed update
-    * forward (or discards its invisible leftovers). For every versioned
-    * terms/stats dir found:
-    *   - seq COMMITTED (its tombstone table exists) → finish the swap and
-    *     rebuild the meta counts from durable tables;
-    *   - seq uncommitted → delete the orphan (the crash happened before
-    *     the marker; the retry recomputes from the unchanged old state).
-    * No-op (one glob) when nothing is pending. Called from update() and
-    * compact(); single-writer per index dir, like all maintenance here.
+  /** Crash half of the delta commit protocol: a crash after a commit
+    * marker but before the meta refresh leaves meta advertising an older
+    * `deltaSeq` than the last committed delta; the counts are then rebuilt
+    * from the views. (A crash before the marker leaves an invisible delta
+    * dir that the retry overwrites — nothing to do here.) Called from
+    * update() and compact(); single-writer per index dir, like all
+    * maintenance here.
     */
   def recover(spark: SparkSession, indexDir: String): Unit = {
-    val fs = hadoopFs(spark, indexDir)
-    val pendingSeqs = Seq(
-      IndexBuilder.termsPath(indexDir), IndexBuilder.statsPath(indexDir))
-      .flatMap { dest =>
-        val glob = new org.apache.hadoop.fs.Path(dest + "__v*")
-        fs.globStatus(glob).toSeq.map(_.getPath.getName)
-          .flatMap(n => n.split("__v").lastOption)
-          .flatMap(s => scala.util.Try(s.toInt).toOption)
-      }.distinct.sorted
     val visible = DeltaLog.listSeqs(spark, indexDir)
-    val committed = visible.toSet
-    var swapped = false
-    pendingSeqs.foreach { s =>
-      if (committed(s)) {
-        swapVersioned(spark, indexDir, s)
-        swapped = true
-      } else {
-        Seq(IndexBuilder.termsPath(indexDir),
-          IndexBuilder.statsPath(indexDir)).foreach { dest =>
-          val v = new org.apache.hadoop.fs.Path(versionedPath(dest, s))
-          if (fs.exists(v)) fs.delete(v, true)
-        }
-      }
-    }
-    // a crash BETWEEN the swap and the meta refresh leaves no __v dirs
-    // behind — detect it by deltaSeq drift (meta advertises an older
-    // version than the last committed delta) and rebuild meta the same way
     val metaDrift = visible.nonEmpty &&
       IndexBuilder.readMeta(spark, indexDir)
         .get("deltaSeq").flatMap(s =>
           scala.util.Try(s.toInt).toOption).getOrElse(0) < visible.last
-    if (swapped || metaDrift) {
-      import spark.implicits._
-      val statsRow = spark.read.parquet(IndexBuilder.statsPath(indexDir))
-        .as[Stats].collect()(0)
-      val termCount =
-        spark.read.parquet(IndexBuilder.termsPath(indexDir)).count()
-      val postingCount = DeltaLog.postingsView(spark, indexDir).count()
+    if (metaDrift) {
+      val stats = DeltaLog.statsView(spark, indexDir, visible)
       IndexBuilder.updateMeta(spark, indexDir, Map(
-        "docCount" -> statsRow.docCount.toString,
-        "totalTokens" -> statsRow.totalTokens.toString,
-        "termCount" -> termCount.toString,
-        "postingCount" -> postingCount.toString,
+        "docCount" -> stats.docCount.toString,
+        "totalTokens" -> stats.totalTokens.toString,
+        "termCount" ->
+          DeltaLog.termsView(spark, indexDir, visible).count().toString,
+        "postingCount" ->
+          DeltaLog.postingsView(spark, indexDir, visible).count().toString,
         "deltaSeq" -> visible.last.toString))
       graft.query.IndexHandles.invalidate(indexDir)
     }

@@ -281,23 +281,18 @@ object IndexBuilder {
       (0 until conf.postingGroups)
         .map(g => s"${postingsPath(indexDir)}/group=$g"): _*)
 
-    // ---- stages terms ∥ stats: independent — run concurrently
+    // ---- stages terms ∥ stats: independent — run concurrently. Both
+    // bases include every delta an earlier index in this dir committed
+    val through = DeltaLog.nextSeq(spark, indexDir) - 1
     runConcurrently(Seq(
       () => {
-        // terms: df = postings per termId (A4; unique (term,doc)). The
-        // dictionary is written clustered by byte length (tlen) so the
-        // fuzzy-expansion prefilter `tlen ≤ maxLen` prunes whole parquet
-        // row groups / cache batches at huge dictionaries (SURVEY §7.4
-        // risk 7 — the reference scans its entire gtf per token).
+        // terms: df = postings per termId (A4; unique (term,doc))
         cp.stage("terms") {
           val df = postings.groupBy($"termId").agg(count(lit(1)).as("df"))
-          termsBase.join(df, "termId")
+          writeTermsBase(spark, termsBase.join(df, "termId")
             .select($"termId", $"term", $"df",
-              octet_length($"term").as("tlen"))
-            .repartitionByRange(
-              math.max(1, conf.partitions / 4), $"tlen", $"term")
-            .sortWithinPartitions($"tlen", $"term")
-            .write.mode("overwrite").parquet(termsPath(indexDir))
+              octet_length($"term").as("tlen")),
+            termsPath(indexDir), conf.partitions / 4, through)
           footerRowCounts(spark, Seq(termsPath(indexDir))).sum
         }
         ()
@@ -305,16 +300,15 @@ object IndexBuilder {
       () => {
         // stats (A5)
         cp.stage("stats") {
-          docs.agg(
+          writeStatsBase(spark, docs.agg(
             count(lit(1)).cast("long").as("docCount"),
-            sum($"docLen").cast("long").as("totalTokens"))
-            .write.mode("overwrite").parquet(statsPath(indexDir))
+            sum($"docLen").cast("long").as("totalTokens")),
+            statsPath(indexDir), through)
           1L
         }
         ()
       }))
-    val statsRow = spark.read.parquet(statsPath(indexDir))
-      .as[Stats].collect()(0)
+    val statsRow = DeltaLog.statsView(spark, indexDir)
     val bucketSize = math.max(
       1L, (statsRow.docCount + conf.queryBuckets - 1) / conf.queryBuckets)
 
@@ -347,7 +341,7 @@ object IndexBuilder {
     val perPartMax = if (partCounts.isEmpty) 0L else partCounts.max
     // one scan for every dictionary metric (termCount + df skew)
     val (termCount, dfStats) = {
-      val r = spark.read.parquet(termsPath(indexDir))
+      val r = DeltaLog.termsView(spark, indexDir)
         .agg(count(lit(1)).as("n"), max($"df").as("m"), avg($"df").as("a"))
         .as[(Long, Option[Long], Option[Double])].collect()(0)
       (r._1, (r._2.getOrElse(0L), r._3.getOrElse(0.0)))
@@ -390,11 +384,11 @@ object IndexBuilder {
     import spark.implicits._
     Seq.empty[DocMeta].toDS.coalesce(1)
       .write.mode("overwrite").parquet(docsPath(indexDir))
-    Seq.empty[(Long, String, Long, Int)]
-      .toDF("termId", "term", "df", "tlen").coalesce(1)
-      .write.mode("overwrite").parquet(termsPath(indexDir))
-    Seq(Stats(0L, 0L)).toDS.coalesce(1)
-      .write.mode("overwrite").parquet(statsPath(indexDir))
+    val through = DeltaLog.nextSeq(spark, indexDir) - 1
+    writeTermsBase(spark, Seq.empty[(Long, String, Long, Int)]
+      .toDF("termId", "term", "df", "tlen"), termsPath(indexDir), 1, through)
+    writeStatsBase(spark, Seq(Stats(0L, 0L)).toDF(), statsPath(indexDir),
+      through)
     (0 until conf.postingGroups).foreach { g =>
       Seq.empty[Posting].toDS.coalesce(1).write.mode("overwrite")
         .parquet(s"${postingsPath(indexDir)}/group=$g")
@@ -418,9 +412,31 @@ object IndexBuilder {
     metrics
   }
 
-  /** Row count of every parquet data file under `dirs`, read from footers
-    * only (each written file = one build partition).
+  /** The one writer of the dictionary BASE table: the build's terms
+    * stage, the empty index and the compaction fold. It is written
+    * clustered by byte length (tlen) so the fuzzy-expansion prefilter
+    * `tlen ≤ maxLen` prunes whole parquet row groups / cache batches at
+    * huge dictionaries (SURVEY §7.4 risk 7 — the reference scans its
+    * entire gtf per token), and stamped with `through`, the highest delta
+    * seq it includes ([[DeltaLog.termsView]]).
     */
+  private[index] def writeTermsBase(spark: SparkSession, terms: DataFrame,
+      dest: String, parts: Int, through: Int): Unit = {
+    terms.select("termId", "term", "df", "tlen")
+      .repartitionByRange(math.max(1, parts), col("tlen"), col("term"))
+      .sortWithinPartitions("tlen", "term")
+      .write.mode("overwrite").parquet(dest)
+    DeltaLog.writeStamp(spark, dest, through)
+  }
+
+  /** The one writer of the stats BASE table, stamped like the terms. */
+  private[index] def writeStatsBase(spark: SparkSession, stats: DataFrame,
+      dest: String, through: Int): Unit = {
+    stats.select("docCount", "totalTokens").coalesce(1)
+      .write.mode("overwrite").parquet(dest)
+    DeltaLog.writeStamp(spark, dest, through)
+  }
+
   /** Row count of one parquet file from its FOOTER (no data read). */
   def footerRowCount(
       st: org.apache.hadoop.fs.FileStatus,
@@ -431,6 +447,9 @@ object IndexBuilder {
     try r.getRecordCount finally r.close()
   }
 
+  /** Row count of every parquet data file under `dirs`, read from footers
+    * only (each written file = one build partition).
+    */
   def footerRowCounts(
       spark: SparkSession, dirs: Seq[String]): Array[Long] = {
     val hconf = spark.sparkContext.hadoopConfiguration

@@ -15,8 +15,10 @@ import graft.index.Schema.{Stats, TermBlock}
   * per-query serving working set — on a cluster these are the natural
   * executor-cache residents, while postings/blocks stay on storage and are
   * read group-pruned per query). Merge-on-read deltas ([[DeltaLog]]) are
-  * snapshotted at handle construction: the delta frames, and the tombstone
-  * map the WAND decode filter needs, are loaded once per index version
+  * snapshotted at handle construction: the delta frames, the dictionary
+  * and stats views ([[DeltaLog.termsView]], [[DeltaLog.statsView]]) and
+  * the tombstone map the WAND decode filter needs are loaded once per
+  * index version
   * (meta.deltaSeq changes per update, so the meta-validated cache swaps
   * handles on every commit).
   */
@@ -101,10 +103,7 @@ final class IndexHandles private (
     b
   }
 
-  val stats: Stats = {
-    import spark.implicits._
-    spark.read.parquet(IndexBuilder.statsPath(indexDir)).as[Stats].head()
-  }
+  val stats: Stats = DeltaLog.statsView(spark, indexDir, deltaSeqs)
 
   // cached partition counts sized to the data (~1M rows per cached
   // partition), not to the writer's partitioning — a small dictionary must
@@ -114,17 +113,12 @@ final class IndexHandles private (
 
   /** Version salt on every frame this handle PERSISTS. Spark's
     * CacheManager substitutes cached data by canonicalized-plan equality,
-    * and `InMemoryFileIndex.equals` compares ROOT PATHS only — file
-    * contents and listings don't participate. Without the salt, the handle
-    * created after an incremental commit builds byte-identical plans over
-    * the same paths and silently RE-ATTACHES to the displaced handle's
-    * still-cached (stale — it has a 60 s release grace) tables: a
-    * freshly-committed doc then doesn't exist for queries until the grace
-    * expires (caught by ServeSpec's freshness test). The salt is a
-    * constant-true filter on a literal derived from this index VERSION, so
-    * same-version handles still share cache while cross-version plans can
-    * never canonicalize equal. meta includes wallMs + deltaSeq, so every
-    * rebuild and every commit changes it.
+    * and `InMemoryFileIndex.equals` compares ROOT PATHS only. Without the
+    * salt, the handle created after a commit builds identical plans over
+    * the same paths and RE-ATTACHES to the displaced handle's still-cached
+    * (stale, 60 s release grace) tables (caught by ServeSpec's freshness
+    * test). The salt is a constant-true filter on a literal derived from
+    * meta (wallMs + deltaSeq change with every rebuild and commit).
     */
   private val versionSalt: Int =
     scala.util.hashing.MurmurHash3.unorderedHash(meta)
@@ -145,7 +139,7 @@ final class IndexHandles private (
     // Levenshtein scan on 2 of 32 cores (measured 710 ms p50; 32-way
     // parallelism cut it ~5×). Size to the session's parallelism so every
     // core works the scan.
-    val raw = spark.read.parquet(IndexBuilder.termsPath(indexDir))
+    val raw = DeltaLog.termsView(spark, indexDir, deltaSeqs)
     val sized =
       if (rows <= maxDriverDictTerms) raw.coalesce(parts(rows))
       else {

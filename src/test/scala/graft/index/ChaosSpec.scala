@@ -14,7 +14,8 @@ import graft.text.Extract
   * interleaving of partial upserts, full snapshots with purges, malformed
   * and stop-only re-extractions, duplicate-url batches, explicit
   * compactions, and CRASH injections (lost `_compacted` marker; fold
-  * restarted under a durable intent) — with the engine checked against
+  * restarted under a durable intent; a commit's delta tables written but
+  * no marker) — with the engine checked against
   * the reference oracle AFTER EVERY STEP at the strongest level:
   * flattened live postings multiset, terms df, and stats. The individual
   * protocol specs each pin one transition; this spec walks a random path
@@ -97,7 +98,7 @@ class ChaosSpec extends AnyFunSuite {
   /** Flattened live postings as a sorted MULTISET (duplicates must show). */
   private def flatLive(dir: String): Seq[(String, String, Long, Long)] = {
     val docs = DeltaLog.docsView(spark, dir).select($"docId", $"url")
-    val terms = spark.read.parquet(IndexBuilder.termsPath(dir))
+    val terms = DeltaLog.termsView(spark, dir)
       .select($"termId", $"term")
     DeltaLog.postingsView(spark, dir)
       .join(docs, "docId").join(terms, "termId")
@@ -118,11 +119,10 @@ class ChaosSpec extends AnyFunSuite {
       s"engine=${got.size} oracle=${want.size} " +
       s"onlyEngine=${(got.diff(want)).take(5)} " +
       s"onlyOracle=${(want.diff(got)).take(5)}")
-    val stats = spark.read.parquet(IndexBuilder.statsPath(dir))
-      .as[Schema.Stats].head()
+    val stats = DeltaLog.statsView(spark, dir)
     assert(stats.docCount == m.docs.size.toLong, s"[$step] docCount")
     assert(stats.totalTokens == m.totalTokens, s"[$step] totalTokens")
-    val dfGot = spark.read.parquet(IndexBuilder.termsPath(dir))
+    val dfGot = DeltaLog.termsView(spark, dir)
       .select($"term", $"df").as[(String, Long)].collect().toMap
     val dfWant = m.gtf.toMap
     assert(dfGot == dfWant, s"[$step] terms df diverge: " +
@@ -250,5 +250,33 @@ class ChaosSpec extends AnyFunSuite {
     Incremental.writeCompactingIntent(spark, dir, bucketSize)
     Incremental.compact(spark, dir, conf)
     verify(dir, m, "epilogue refold")
+
+    // crash between the delta tables' write (df and stats changes
+    // included) and the commit marker: the seq stays invisible, and its
+    // retry overwrites it without applying any change twice
+    val edited = crawl.keys.min
+    crawl += edited -> ((crawl(edited)._1 + 1, Normal: Kind))
+    val crashed = pageRow(edited, crawl(edited)._1, Normal) +:
+      (0 until 3).map { _ =>
+        val u = universe; universe += 1
+        crawl += u -> ((0, Normal: Kind)); pageRow(u, 0, Normal)
+      }
+    val metaPath = new Path(s"$dir/meta.json")
+    val metaBefore = DeltaLog.readSmallBytes(hfs(dir), metaPath)
+    assert(!Incremental.update(spark, df(crashed), dir,
+      conf.copy(deltaCompactEvery = 100, tombstoneCompactFraction = 100.0),
+      purgeVanished = false).compacted)
+    val seq = DeltaLog.listSeqs(spark, dir).last
+    hfs(dir).delete(new Path(s"${DeltaLog.seqPath(dir, seq)}/_committed"),
+      false)
+    hfs(dir).delete(new Path(DeltaLog.removedPath(dir, seq)), true)
+    DeltaLog.writeAtomicString(hfs(dir), metaPath.toString,
+      new String(metaBefore, java.nio.charset.StandardCharsets.UTF_8))
+    IndexHandles.invalidate(dir)
+    assert(!DeltaLog.listSeqs(spark, dir).contains(seq))
+    verify(dir, m, "epilogue crash-before-marker")
+    Incremental.update(spark, df(crashed), dir, conf, purgeVanished = false)
+    applyToOracle(m, crashed, purge = false)
+    verify(dir, m, "epilogue retry")
   }
 }

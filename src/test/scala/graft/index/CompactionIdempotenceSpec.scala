@@ -49,13 +49,17 @@ class CompactionIdempotenceSpec extends AnyFunSuite {
     */
   private def flatLiveSeq(dir: String): Seq[(String, String, Int, Int)] = {
     val docs = DeltaLog.docsView(spark, dir).select($"docId", $"url")
-    val terms = spark.read.parquet(IndexBuilder.termsPath(dir))
+    val terms = DeltaLog.termsView(spark, dir)
       .select($"termId", $"term")
     DeltaLog.postingsView(spark, dir)
       .join(docs, "docId").join(terms, "termId")
       .select($"url", $"term", $"tf", $"docLen")
       .as[(String, String, Int, Int)].collect().toSeq.sorted
   }
+
+  private def termDfs(dir: String): Seq[(String, Long)] =
+    DeltaLog.termsView(spark, dir).select($"term", $"df")
+      .as[(String, Long)].collect().toSeq.sorted
 
   private val v1: IndexedSeq[Synth.PageRow] = Synth.pages(60)
   private val added: IndexedSeq[Synth.PageRow] =
@@ -94,6 +98,8 @@ class CompactionIdempotenceSpec extends AnyFunSuite {
     Incremental.update(spark, df(v1 ++ added), dir, conf)
     Incremental.compact(spark, dir, conf)
     val before = flatLiveSeq(dir)
+    val termsBefore = termDfs(dir)
+    val statsBefore = DeltaLog.statsView(spark, dir)
 
     // reconstruct "crashed between fold and clear": base already folded,
     // BOTH floor copies absent, intent durable with the fold's bucketSize
@@ -107,6 +113,10 @@ class CompactionIdempotenceSpec extends AnyFunSuite {
     assert(DeltaLog.listSeqs(spark, dir).isEmpty)
     assert(dupPostings(dir) == 0 && dupDocs(dir) == 0)
     assert(flatLiveSeq(dir) == before)
+    // the refold wrote the same terms and stats bases: the stamp kept the
+    // re-exposed deltas' df and stats changes from being added again
+    assert(termDfs(dir) == termsBefore)
+    assert(DeltaLog.statsView(spark, dir) == statsBefore)
 
     // and ≡ a fresh build of the same corpus
     val freshDir = java.nio.file.Files

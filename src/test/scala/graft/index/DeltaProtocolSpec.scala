@@ -82,7 +82,8 @@ class DeltaProtocolSpec extends AnyFunSuite {
       DeltaLog.removedPath(dir, 1) + "/_temporary/0")
     f.mkdirs(rm)
     assert(DeltaLog.listSeqs(spark, dir).isEmpty)
-    assert(DeltaLog.tombstonesDf(spark, dir).isEmpty)
+    assert(DeltaLog.tombstonesDf(spark, dir, DeltaLog.listSeqs(spark, dir))
+      .isEmpty)
     // recover() must not wedge on the unreadable half-delta
     Incremental.recover(spark, dir)
     assert(DeltaLog.listSeqs(spark, dir).isEmpty)
@@ -127,6 +128,75 @@ class DeltaProtocolSpec extends AnyFunSuite {
       .select($"url", $"score").as[(String, Float)].collect().toVector
     assert(groups(got) == groups(
       oracleV2.searchTop("revised protocol", RefModel.Bm25, 100000)))
+  }
+
+  test("a delta dir without terms/ and stats/ (written before those " +
+      "tables existed) reads as no dictionary or stats change") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_nodf_").toString
+    IndexBuilder.build(spark, df(v1), dir, conf)
+    Incremental.update(spark, df(v2), dir, conf.copy(deltaCompactEvery = 100))
+    assert(DeltaLog.listSeqs(spark, dir) == Seq(1))
+    val f = hfs(dir)
+    Seq("terms", "stats").foreach(t => assert(f.delete(
+      new org.apache.hadoop.fs.Path(s"${DeltaLog.seqPath(dir, 1)}/$t"), true)))
+    def termDfs(frame: org.apache.spark.sql.DataFrame) =
+      frame.select($"termId", $"term", $"df")
+        .as[(Long, String, Long)].collect().toSeq.sorted
+    assert(termDfs(DeltaLog.termsView(spark, dir)) ==
+      termDfs(spark.read.parquet(IndexBuilder.termsPath(dir))))
+    assert(DeltaLog.statsView(spark, dir) == spark.read
+      .parquet(IndexBuilder.statsPath(dir)).as[Schema.Stats].head())
+  }
+
+  test("a new term is numbered above a dropped term's id: no termId " +
+      "carries two names before the fold, answers ≡ oracle") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_termid_").toString
+    val t0 = v1.head.warc_ts.getTime
+    def page(u: String, text: String, h: Int) = Schema.Page(
+      s"/termid/$u", new Timestamp(t0 + h * 3600000L), null, text, "en")
+    val noFold = conf.copy(deltaCompactEvery = 100,
+      tombstoneCompactFraction = 100.0)
+    val m = new RefModel()
+    def add(p: Schema.Page): Unit = Extract.extractText(p.html, p.text)
+      .foreach(t => m.addDocument(p.url, t, p.warc_ts.getTime))
+    def upsert(rows: Seq[Schema.Page]): Unit = {
+      Incremental.update(spark, spark.createDataset(rows).toDF(), dir,
+        noFold, purgeVanished = false)
+      rows.foreach(add)
+    }
+    val init = Seq(page("a", "alpha beta zebra", 0),
+      page("b", "alpha gamma", 0), page("c", "beta gamma", 0))
+    IndexBuilder.build(spark, spark.createDataset(init).toDF(), dir, noFold)
+    init.foreach(add)
+    def idOf(term: String) = DeltaLog.termsView(spark, dir)
+      .filter($"term" === term).select($"termId").as[Long].collect().toSeq
+    val maxId = spark.read.parquet(IndexBuilder.termsPath(dir))
+      .agg(org.apache.spark.sql.functions.max($"termId")).as[Long].head()
+    assert(idOf("ZEBRA") == Seq(maxId))
+    upsert(Seq(page("a", "alpha beta", 1))) // zebra → df 0
+    assert(idOf("ZEBRA").isEmpty)
+    upsert(Seq(page("d", "quokka alpha", 2)))
+    assert(DeltaLog.listSeqs(spark, dir) == Seq(1, 2))
+    assert(idOf("QUOKKA").forall(_ > maxId) && idOf("QUOKKA").size == 1)
+    // every name any layer gives a termId: one per id
+    val named = spark.read.parquet(IndexBuilder.termsPath(dir))
+      .select($"termId", $"term")
+      .unionByName(spark.read.parquet(
+        Seq(1, 2).map(s => s"${DeltaLog.seqPath(dir, s)}/terms"): _*)
+        .filter($"term".isNotNull).select($"termId", $"term"))
+      .as[(Long, String)].collect().groupBy(_._1)
+    assert(named.values.forall(_.map(_._2).distinct.length == 1), named)
+    def answers(): Unit = Seq("quokka", "zebra", "alpha", "beta gamma")
+      .foreach { q =>
+        val got = Search.searchTop(spark, dir, q, Search.Bm25, 100)
+          .select($"url", $"score").as[(String, Float)].collect().toVector
+        assert(groups(got) == groups(m.searchTop(q, RefModel.Bm25, 100)), q)
+      }
+    answers()
+    Incremental.compact(spark, dir, noFold)
+    answers()
   }
 
   test("snapshot-parameterized reads honor the passed seq listing, not " +

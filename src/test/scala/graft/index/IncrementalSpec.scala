@@ -3,6 +3,8 @@ package graft.index
 import java.nio.charset.StandardCharsets
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -118,7 +120,7 @@ class IncrementalSpec extends AnyFunSuite {
     def flat(dir: String): Set[(String, String, Int, Int)] = {
       val docs = spark.read.parquet(IndexBuilder.docsPath(dir))
         .select($"docId", $"url")
-      val terms = spark.read.parquet(IndexBuilder.termsPath(dir))
+      val terms = DeltaLog.termsView(spark, dir)
         .select($"termId", $"term")
       spark.read.parquet(IndexBuilder.postingsPath(dir))
         .join(docs, "docId").join(terms, "termId")
@@ -145,9 +147,9 @@ class IncrementalSpec extends AnyFunSuite {
   }
 
   test("terms ≡ fresh rebuild at (term, df) level") {
-    val upd = spark.read.parquet(IndexBuilder.termsPath(updatedDir))
+    val upd = DeltaLog.termsView(spark, updatedDir)
       .select($"term", $"df").as[(String, Long)].collect().toMap
-    val fresh = spark.read.parquet(IndexBuilder.termsPath(freshDir))
+    val fresh = DeltaLog.termsView(spark, freshDir)
       .select($"term", $"df").as[(String, Long)].collect().toMap
     assert(upd == fresh)
   }
@@ -155,7 +157,7 @@ class IncrementalSpec extends AnyFunSuite {
   /** Live (merge-on-read) flattened postings of an index directory. */
   private def flatLive(dir: String): Set[(String, String, Int, Int)] = {
     val docs = DeltaLog.docsView(spark, dir).select($"docId", $"url")
-    val terms = spark.read.parquet(IndexBuilder.termsPath(dir))
+    val terms = DeltaLog.termsView(spark, dir)
       .select($"termId", $"term")
     DeltaLog.postingsView(spark, dir)
       .join(docs, "docId").join(terms, "termId")
@@ -218,7 +220,7 @@ class IncrementalSpec extends AnyFunSuite {
     val baseOnly = {
       val docs = spark.read.parquet(IndexBuilder.docsPath(dir))
         .select($"docId", $"url")
-      val terms = spark.read.parquet(IndexBuilder.termsPath(dir))
+      val terms = DeltaLog.termsView(spark, dir)
         .select($"termId", $"term")
       spark.read.parquet(IndexBuilder.postingsPath(dir))
         .join(docs, "docId").join(terms, "termId")
@@ -261,11 +263,12 @@ class IncrementalSpec extends AnyFunSuite {
 
   test("blocks (base + delta layers, tombstones applied) decode to the " +
       "live postings view") {
-    val tomb = DeltaLog.tombstoneMap(spark, updatedDir)
+    val seqs = DeltaLog.listSeqs(spark, updatedDir)
+    val tomb = DeltaLog.tombstoneMap(spark, updatedDir, seqs)
     val base = spark.read
       .parquet(IndexBuilder.blocksPath(updatedDir))
       .drop("group").withColumn("_seq", lit(0))
-    val delta = DeltaLog.deltaBlocks(spark, updatedDir).get
+    val delta = DeltaLog.deltaBlocks(spark, updatedDir, seqs).get
       .withColumn("_seq", $"seq".cast("int")).drop("seq")
     val fromBlocks = base.unionByName(delta)
       .select($"_seq", struct($"termId", $"bucket", $"minDocId",
@@ -332,77 +335,127 @@ class IncrementalSpec extends AnyFunSuite {
   private def hfs(dir: String) = new org.apache.hadoop.fs.Path(dir)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def copyDir(src: String, dst: String): Unit = {
-    val f = hfs(src)
-    org.apache.hadoop.fs.FileUtil.copy(
-      f, new org.apache.hadoop.fs.Path(src),
-      f, new org.apache.hadoop.fs.Path(dst),
-      false, spark.sparkContext.hadoopConfiguration)
+  private def metaJson(dir: String): String =
+    new String(DeltaLog.readSmallBytes(hfs(dir),
+      new org.apache.hadoop.fs.Path(s"$dir/meta.json")), StandardCharsets.UTF_8)
+
+  private def restoreMeta(dir: String, json: String): Unit = {
+    DeltaLog.writeAtomicString(hfs(dir), s"$dir/meta.json", json)
+    graft.query.IndexHandles.invalidate(dir)
   }
 
-  private def moveDir(src: String, dst: String): Unit = {
-    val f = hfs(src)
-    val d = new org.apache.hadoop.fs.Path(dst)
-    if (f.exists(d)) f.delete(d, true)
-    f.rename(new org.apache.hadoop.fs.Path(src), d)
-  }
+  /** (term, df) rows of the dictionary view, sorted — duplicates show. */
+  private def termDfs(dir: String): Seq[(String, Long)] =
+    DeltaLog.termsView(spark, dir).select($"term", $"df")
+      .as[(String, Long)].collect().toSeq.sorted
 
-  test("recover() rolls a crash-after-commit-marker forward: terms/stats " +
-      "swap completed, meta rebuilt, retry is a no-change no-op") {
+  test("recover() rolls a crash-after-commit-marker forward: meta rebuilt " +
+      "from the views, retry is a no-change no-op (no df applied twice)") {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_crash_fwd_").toString
     IndexBuilder.build(spark, df(v1), dir, conf)
-    val termsP = IndexBuilder.termsPath(dir)
-    val statsP = IndexBuilder.statsPath(dir)
-    // keep the PRE-update terms/stats aside, then update normally
-    copyDir(termsP, s"$dir/terms_preupdate")
-    copyDir(statsP, s"$dir/stats_preupdate")
+    val staleMeta = metaJson(dir)
     val report = Incremental.update(spark, df(v2), dir, conf)
-    assert(report.changed)
+    assert(report.changed && !report.compacted)
     val seq = DeltaLog.listSeqs(spark, dir).last
-    val expectedTerms = spark.read.parquet(termsP)
-      .select($"term", $"df").as[(String, Long)].collect().toSet
-    val expectedStats = spark.read.parquet(statsP)
-      .as[Schema.Stats].head()
-    // reconstruct the crash state: marker committed, but terms/stats not
-    // yet swapped (live tables are still the pre-update versions, the new
-    // versions sit in the __v<seq> side dirs) and meta still stale
-    moveDir(termsP, s"${termsP}__v$seq")
-    moveDir(statsP, s"${statsP}__v$seq")
-    moveDir(s"$dir/terms_preupdate", termsP)
-    moveDir(s"$dir/stats_preupdate", statsP)
-    IndexBuilder.updateMeta(spark, dir, Map("docCount" -> "-1"))
+    val good = IndexBuilder.readMeta(spark, dir)
+    val expectedTerms = termDfs(dir)
+    val expectedStats = DeltaLog.statsView(spark, dir)
+    // crash state: the marker committed, meta still the pre-update version
+    restoreMeta(dir, staleMeta)
 
     Incremental.recover(spark, dir)
 
-    assert(!hfs(dir).exists(
-      new org.apache.hadoop.fs.Path(s"${termsP}__v$seq")))
-    assert(spark.read.parquet(termsP)
-      .select($"term", $"df").as[(String, Long)].collect().toSet ==
-      expectedTerms)
-    assert(spark.read.parquet(statsP).as[Schema.Stats].head() ==
-      expectedStats)
     val meta = IndexBuilder.readMeta(spark, dir)
-    assert(meta("docCount").toLong == expectedStats.docCount)
     assert(meta("deltaSeq").toInt == seq)
+    Seq("docCount", "totalTokens", "termCount", "postingCount")
+      .foreach(k => assert(meta(k) == good(k), k))
+    assert(meta("termCount").toLong == expectedTerms.size)
+    assert(meta("docCount").toLong == expectedStats.docCount)
     // the interrupted update's retry now sees a consistent state: nothing
     // stale → no change, no double-applied df
     assert(!Incremental.update(spark, df(v2), dir, conf).changed)
+    assert(DeltaLog.listSeqs(spark, dir) == Seq(seq))
+    assert(termDfs(dir) == expectedTerms)
+    assert(DeltaLog.statsView(spark, dir) == expectedStats)
   }
 
-  test("recover() discards versioned dirs of an UNcommitted seq " +
-      "(crash before the marker leaves the old index intact)") {
+  test("an UNcommitted seq's terms/stats deltas are invisible: the retry " +
+      "overwrites the seq and terms ≡ a fresh rebuild") {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_crash_back_").toString
     IndexBuilder.build(spark, df(v1), dir, conf)
-    val termsP = IndexBuilder.termsPath(dir)
-    val before = spark.read.parquet(termsP)
-      .select($"term", $"df").as[(String, Long)].collect().toSet
-    copyDir(termsP, s"${termsP}__v99") // orphan: seq 99 never committed
-    Incremental.recover(spark, dir)
-    assert(!hfs(dir).exists(new org.apache.hadoop.fs.Path(s"${termsP}__v99")))
-    assert(spark.read.parquet(termsP)
-      .select($"term", $"df").as[(String, Long)].collect().toSet == before)
+    val before = termDfs(dir)
+    val statsBefore = DeltaLog.statsView(spark, dir)
+    val staleMeta = metaJson(dir)
+    assert(!Incremental.update(spark, df(v2), dir, conf).compacted)
+    val seq = DeltaLog.listSeqs(spark, dir).last
+    // crash state: every delta table written (df and stats changes
+    // included), no tombstone table, no marker, meta not refreshed
+    val f = hfs(dir)
+    assert(f.exists(new org.apache.hadoop.fs.Path(
+      s"${DeltaLog.seqPath(dir, seq)}/terms")))
+    f.delete(new org.apache.hadoop.fs.Path(
+      s"${DeltaLog.seqPath(dir, seq)}/_committed"), false)
+    f.delete(new org.apache.hadoop.fs.Path(
+      DeltaLog.removedPath(dir, seq)), true)
+    restoreMeta(dir, staleMeta)
+    assert(DeltaLog.listSeqs(spark, dir).isEmpty)
+    assert(termDfs(dir) == before)
+    assert(DeltaLog.statsView(spark, dir) == statsBefore)
+
+    assert(Incremental.update(spark, df(v2), dir, conf).changed)
+    assert(DeltaLog.listSeqs(spark, dir) == Seq(seq))
+    assert(termDfs(dir) == termDfs(freshDir))
+    assert(DeltaLog.statsView(spark, dir) ==
+      DeltaLog.statsView(spark, freshDir))
+  }
+
+  test("a non-compacting commit writes only its delta dir and meta.json: " +
+      "every other file of the index stays byte-identical") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_commit_bytes_").toString
+    IndexBuilder.build(spark, df(v1), dir, conf)
+    val root = java.nio.file.Paths.get(dir)
+    def files(seq: Int): Map[String, String] = {
+      val st = java.nio.file.Files.walk(root)
+      try st.iterator().asScala
+        .filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => root.relativize(p).toString)
+        .filterNot(r => r == "meta.json" || r.startsWith(s"deltas/seq_$seq/"))
+        .map(r => r -> java.security.MessageDigest.getInstance("MD5")
+          .digest(java.nio.file.Files.readAllBytes(root.resolve(r)))
+          .map("%02x".format(_)).mkString)
+        .toMap
+      finally st.close()
+    }
+    val seq = DeltaLog.nextSeq(spark, dir)
+    val before = files(seq)
+    val report = Incremental.update(spark, df(v2), dir, conf)
+    assert(report.changed && !report.compacted)
+    assert(DeltaLog.listSeqs(spark, dir) == Seq(seq))
+    assert(files(seq) == before)
+  }
+
+  test("a fold stopped after its terms/stats base swap, before clear(): " +
+      "the views ≡ a fresh rebuild, no delta counted twice") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_fold_swap_").toString
+    IndexBuilder.build(spark, df(v1), dir, conf)
+    assert(!Incremental.update(spark, df(v2), dir, conf).compacted)
+    val seqs = DeltaLog.listSeqs(spark, dir)
+    val preFoldMeta = metaJson(dir)
+    Incremental.compact(spark, dir, conf)
+    // crash state: every base rewritten and stamped, but no _compacted
+    // marker and meta not refreshed — the folded deltas are still visible
+    assert(hfs(dir).delete(
+      new org.apache.hadoop.fs.Path(s"$dir/deltas/_compacted"), false))
+    restoreMeta(dir, preFoldMeta)
+    assert(DeltaLog.listSeqs(spark, dir) == seqs)
+    assert(termDfs(dir) == termDfs(freshDir))
+    assert(DeltaLog.statsView(spark, dir) ==
+      DeltaLog.statsView(spark, freshDir))
+    assert(flatLive(dir) == flatLive(freshDir))
   }
 
   test("recover() rebuilds meta after a crash between terms swap and the " +

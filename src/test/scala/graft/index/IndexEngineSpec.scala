@@ -227,12 +227,12 @@ class IndexEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(stats.docCount == oracle.docs.size.toLong)
     assert(stats.totalTokens == oracle.totalTokens)
     val termCount =
-      spark.read.parquet(IndexBuilder.termsPath(indexDir)).count()
+      DeltaLog.termsView(spark, indexDir).count()
     assert(termCount == oracle.gtf.size.toLong)
   }
 
   test("df column equals oracle gtf for every term") {
-    val dfMap = spark.read.parquet(IndexBuilder.termsPath(indexDir))
+    val dfMap = DeltaLog.termsView(spark, indexDir)
       .select($"term", $"df").as[(String, Long)].collect().toMap
     assert(dfMap.size == oracle.gtf.size)
     oracle.gtf.foreach { case (term, df) =>

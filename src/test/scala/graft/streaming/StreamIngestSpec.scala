@@ -54,7 +54,7 @@ class StreamIngestSpec extends AnyFunSuite {
     def flat(d: String): Set[(String, String, Int, Int)] = {
       val docs = graft.index.DeltaLog.docsView(spark, d)
         .select($"docId", $"url")
-      val terms = spark.read.parquet(IndexBuilder.termsPath(d))
+      val terms = graft.index.DeltaLog.termsView(spark, d)
         .select($"termId", $"term")
       graft.index.DeltaLog.postingsView(spark, d)
         .join(docs, "docId").join(terms, "termId")
