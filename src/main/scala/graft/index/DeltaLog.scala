@@ -31,10 +31,11 @@ import Schema.{Posting, Stats}
   * = its seq) is live iff `r >= lastTombstoneSeq(docId)` (0 when none).
   * A replaced doc keeps its stable docId: the tombstone at seq s kills the
   * base/earlier rows, the seq-s rows survive (`s >= s`). The dictionary
-  * and stats are summed instead ([[termsView]], [[statsView]]): the base
-  * `terms`/`stats` dirs each carry a stamp, the highest seq they already
-  * include, and only deltas above it are added. A delta without these
-  * tables (written before they existed) adds nothing.
+  * and stats are summed instead ([[Snapshot.terms]], [[Snapshot.stats]]):
+  * the base `terms`/`stats` dirs each carry a stamp, the highest seq they
+  * already include, and only deltas above it are added. A delta without
+  * these tables (written before they existed) adds nothing. Every read of
+  * base + deltas goes through one [[Snapshot]].
   *
   * This is exactly Iceberg's merge-on-read shape (delete files + data
   * files + periodic compaction) expressed on plain parquet; on a real
@@ -47,7 +48,7 @@ import Schema.{Posting, Stats}
 object DeltaLog {
 
   def deltasPath(dir: String) = s"$dir/deltas"
-  def seqPath(dir: String, seq: Int) = s"$dir/deltas/seq_$seq"
+  private[index] def seqPath(dir: String, seq: Int) = s"$dir/deltas/seq_$seq"
   private def compactedMarker(dir: String) = s"$dir/deltas/_compacted"
   private def committedMarker(dir: String, seq: Int) =
     s"${seqPath(dir, seq)}/_committed"
@@ -167,9 +168,9 @@ object DeltaLog {
     * just lenient: re-exposing folded deltas over the folded base yields
     * the identical live view, BECAUSE every docId a delta writes reads as
     * tombstoned at its seq — including docs merely ADDED by the delta
-    * ([[tombstonesDf]] derives those entries from the delta's own docs/
-    * table). The tombstone kills each such doc's folded layer-0 rows and
-    * its delta rows re-supply the same content; a marker lost to a crash
+    * ([[Snapshot.tombstones]] derives those entries from the delta's own
+    * docs/ table). The tombstone kills each such doc's folded layer-0 rows
+    * and its delta rows re-supply the same content; a marker lost to a crash
     * (and likewise a compact() restarted mid-fold) degrades read cost,
     * never correctness. Were adds untombstoned, both rows would read as
     * live and the doc would be double-materialized.
@@ -237,74 +238,12 @@ object DeltaLog {
     math.max(listSeqs(spark, dir).lastOption.getOrElse(0),
       compactedThrough(spark, dir)) + 1
 
-  /** (docId, tombSeq = max tombstone seq) over the GIVEN seq snapshot —
-    * the small side of every liveness join; None when no deltas. Callers
-    * holding a handle pass the seq listing captured at handle construction
-    * so every derived frame shares one consistent snapshot.
-    *
-    * The set unions the WRITTEN kill tombstones (`removed/`) with DERIVED
-    * entries (docId, seq) from each delta's `docs/` table: every docId a
-    * delta writes — docs merely ADDED included — reads as tombstoned at its
-    * seq. For an add this changes nothing in normal state, but it upholds
-    * the invariant the fold's restart/lost-marker safety rests on (see
-    * [[compactedThrough]]). Deriving (instead of writing add rows into
-    * `removed/`) keeps the kill set pure for the compaction trigger and
-    * retrofits the invariant onto deltas committed by older writers.
-    */
-  def tombstonesDf(
-      spark: SparkSession, dir: String, seqs: Seq[Int]): Option[DataFrame] =
-    killTombstonesDf(spark, dir, seqs).map { removed =>
-      val f = fs(spark, dir)
-      // hand-crafted/degenerate deltas may lack docs/ — skip, don't fail
-      val docsDirs = seqs.map(s => s"${seqPath(dir, s)}/docs")
-        .filter(p => f.exists(new Path(p)))
-      val sides =
-        if (docsDirs.isEmpty) removed
-        else removed.unionByName(spark.read.parquet(docsDirs: _*)
-          .select(col("docId"), col("seq")))
-      sides.groupBy("docId").agg(max(col("seq")).cast("int").as("tombSeq"))
-    }
-
-  /** WRITTEN kill tombstones only (replaced/removed docs — no derived add
-    * entries), ungrouped (docId, seq). This is the read the compaction
-    * TRIGGER wants: a pure-add delta kills nothing and must not drag the
-    * fold forward.
-    */
-  private[graft] def killTombstonesDf(
-      spark: SparkSession, dir: String, seqs: Seq[Int]): Option[DataFrame] =
-    if (seqs.isEmpty) None
-    else Some(spark.read
-      .parquet(seqs.map(s => removedPath(dir, s)): _*)
-      .select(col("docId"), col("seq")))
-
-  /** Driver-collected tombstones for the WAND decode filter. Bounded by
-    * compaction (min(fraction·docCount, tombstoneAbsoluteCap) triggers a
-    * fold) AND by the caller's own gate ([[graft.query.IndexHandles]]
-    * falls back to the distributed liveness join past
-    * `graft.maxDriverTombstones`), so this stays a small working set.
-    */
-  def tombstoneMap(
-      spark: SparkSession, dir: String, seqs: Seq[Int]): Map[Long, Int] = {
-    import spark.implicits._
-    tombstonesDf(spark, dir, seqs) match {
-      case None => Map.empty
-      case Some(t) => t.as[(Long, Int)].collect().toMap
-    }
-  }
-
-  private def basePostings(spark: SparkSession, dir: String): DataFrame = {
-    val g = IndexBuilder.readMeta(spark, dir)("postingGroups").toInt
-    spark.read.parquet((0 until g)
-      .map(i => s"${IndexBuilder.postingsPath(dir)}/group=$i"): _*)
-      .select("termId", "docId", "tf", "docLen")
-  }
-
   /** Row count of the parquet files directly under each of `paths` (a
     * missing path counts 0), from their footers — no Spark job. Memoized
     * per dir KEYED ON ITS FILE STATUSES (path+length+mtime): a committed
     * seq's files are immutable and seqs are never reused ([[nextSeq]]
     * floors at [[compactedThrough]]), so repeated view constructions over
-    * the same snapshot — every postingsView/docsView during an update or
+    * the same snapshot — every postings/docs view during an update or
     * compaction — skip the per-file footer opens, while a
     * rebuilt-in-place dir (tests) changes the key and misses rather than
     * serving a stale count. The listStatus itself stays per-call: one
@@ -333,98 +272,15 @@ object DeltaLog {
     }.sum
   }
 
-  /** Tombstone row count for a (dir, seqs) snapshot ([[parquetRows]]). */
-  private[graft] def tombRowCount(
-      spark: SparkSession, dir: String, seqs: Seq[Int]): Long =
-    // removed/ + docs/: [[tombstonesDf]] derives an add-tombstone per doc
-    // row, so the liveness working set the overflow gates bound includes
-    // both sides
-    parquetRows(spark, seqs.flatMap(s =>
-      Seq(removedPath(dir, s), s"${seqPath(dir, s)}/docs")))
-
   /** Tombstone working-set cap for driver collects/broadcasts — THE single
-    * definition shared by the query handles ([[graft.query.IndexHandles]]
-    * tombOverflow) and the maintenance liveness join below.
+    * definition behind [[Snapshot.overflow]], which both the query handles
+    * and the maintenance liveness join read.
     */
   private[graft] def maxDriverTombstones(spark: SparkSession): Long =
     spark.conf.getOption("graft.maxDriverTombstones").map(_.toLong)
       .getOrElse(10000000L)
 
-  /** Applies the liveness rule to a frame carrying a `_seq` layer column.
-    * The tombstone side is usually small and broadcast — but a maintenance
-    * lull under heavy churn can leave more tombstones than the driver can
-    * collect (a broadcast build side IS a driver collect). Past the same
-    * `graft.maxDriverTombstones` gate the query handles use (row count from
-    * parquet FOOTERS, no job) the hint is dropped so Spark picks a shuffled
-    * join — how the overflowed compaction that CLEARS the lull reads.
-    */
-  def withLiveness(
-      spark: SparkSession, dir: String, layers: DataFrame,
-      seqs: Seq[Int]): DataFrame =
-    tombstonesDf(spark, dir, seqs) match {
-      case None => layers.drop("_seq")
-      case Some(t) =>
-        val cap = maxDriverTombstones(spark)
-        val tombRows = tombRowCount(spark, dir, seqs)
-        val side = if (tombRows > cap) t else broadcast(t)
-        layers.join(side, Seq("docId"), "left")
-          .filter(col("_seq") >= coalesce(col("tombSeq"), lit(0)))
-          .drop("_seq", "tombSeq")
-    }
-
-  /** Live postings across base + deltas: (termId, docId, tf, docLen). */
-  def postingsView(
-      spark: SparkSession, dir: String, seqs: Seq[Int]): DataFrame = {
-    val base = basePostings(spark, dir)
-    if (seqs.isEmpty) return base
-    val cols = Seq("termId", "docId", "tf", "docLen")
-    val delta = spark.read
-      .parquet(seqs.map(s => s"${seqPath(dir, s)}/postings"): _*)
-    withLiveness(spark, dir,
-      base.withColumn("_seq", lit(0))
-        .select((cols :+ "_seq").map(col): _*)
-        .unionByName(delta.withColumn("_seq", col("seq").cast("int"))
-          .select((cols :+ "_seq").map(col): _*)),
-      seqs)
-  }
-
-  def postingsView(spark: SparkSession, dir: String): DataFrame =
-    postingsView(spark, dir, listSeqs(spark, dir))
-
   private val docCols = Seq("docId", "url", "warc_ts", "docLen")
-
-  /** Live docs table across base + deltas. */
-  def docsView(
-      spark: SparkSession, dir: String, seqs: Seq[Int]): DataFrame = {
-    val base = spark.read.parquet(IndexBuilder.docsPath(dir))
-      .select(docCols.map(col): _*)
-    if (seqs.isEmpty) return base
-    val delta = spark.read
-      .parquet(seqs.map(s => s"${seqPath(dir, s)}/docs"): _*)
-    withLiveness(spark, dir,
-      base.withColumn("_seq", lit(0))
-        .select((docCols :+ "_seq").map(col): _*)
-        .unionByName(delta.withColumn("_seq", col("seq").cast("int"))
-          .select((docCols :+ "_seq").map(col): _*)),
-      seqs)
-  }
-
-  def docsView(spark: SparkSession, dir: String): DataFrame =
-    docsView(spark, dir, listSeqs(spark, dir))
-
-  /** Every doc row ever written (dead included) — for max-docId assignment,
-    * so a purged doc's id is never handed to a new url while tombstones
-    * that mention it are still live.
-    */
-  def docsAllLayers(spark: SparkSession, dir: String): DataFrame = {
-    val seqs = listSeqs(spark, dir)
-    val base = spark.read.parquet(IndexBuilder.docsPath(dir))
-      .select(docCols.map(col): _*)
-    if (seqs.isEmpty) base
-    else base.unionByName(spark.read
-      .parquet(seqs.map(s => s"${seqPath(dir, s)}/docs"): _*)
-      .select(docCols.map(col): _*))
-  }
 
   /** The stamp of a base `terms`/`stats` dir: the highest delta seq the
     * base includes (missing → 0), written into the staging dir before the
@@ -438,90 +294,255 @@ object DeltaLog {
       spark: SparkSession, table: String, seq: Int): Unit =
     writeAtomicString(fs(spark, table), stampPath(table), seq.toString)
 
-  /** The `name` tables `seqs` wrote, above the stamp of `stampOf`. */
-  private def deltaTables(spark: SparkSession, dir: String, seqs: Seq[Int],
-      name: String, stampOf: Option[String]): Seq[String] = {
-    val f = fs(spark, dir)
-    val through = stampOf.fold(0L)(t => readNumber(f, new Path(stampPath(t))))
-    seqs.filter(_ > through).map(s => s"${seqPath(dir, s)}/$name")
-      .filter(t => f.exists(new Path(t)))
-  }
-
-  /** The dictionary readers see, (termId, term, df, tlen): the base plus
-    * the signed df changes of the deltas above its stamp. The changes are
-    * summed on the driver — O(batch × visible seqs), bounded by compaction
-    * — and applied to the base in one narrow pass, with no shuffle: terms
-    * new in a delta are appended, rows whose df falls to 0 are dropped.
-    * With no such delta this is the base read as written.
+  /** The read snapshot of `dir` now: its seq listing, taken once. See
+    * [[Snapshot]]; a query handle passes `collectTombstones = true`.
     */
-  def termsView(spark: SparkSession, dir: String, seqs: Seq[Int]): DataFrame = {
+  def snapshot(spark: SparkSession, dir: String,
+      collectTombstones: Boolean = false): Snapshot =
+    new Snapshot(spark, dir, listSeqs(spark, dir), collectTombstones)
+
+  /** One consistent read of base + deltas: the ONE delta-seq listing
+    * ([[listSeqs]]) every view of it is built from, so a delta commit
+    * landing while a reader builds its frames can never pair seq-N data
+    * files with a tombstone set missing seq N (which would score a
+    * replaced doc from both its old and new layers). Every reader of base
+    * + delta tables goes through one: the query handles, the update, the
+    * fold, `recover` and the build's final stats and dictionary reads.
+    *
+    * Row tables (postings, blocks, docs) are read as layers
+    * ([[layered]]) and filtered by the liveness rule ([[live]]); the
+    * dictionary and stats are summed instead ([[terms]], [[stats]]).
+    *
+    * The tombstone set is read one of two ways. A maintenance snapshot
+    * joins it straight from the deltas' parquet. A query handle's
+    * snapshot (`collectTombstones`) collects it to the driver once
+    * ([[tombMap]] — the WAND decode filter needs the map anyway) and
+    * joins those rows, so the handle reads its tombstones once.
+    */
+  final class Snapshot private[DeltaLog] (
+      spark: SparkSession,
+      dir: String,
+      val seqs: Seq[Int],
+      collectTombstones: Boolean) {
     import spark.implicits._
-    val table = IndexBuilder.termsPath(dir)
-    val base = spark.read.parquet(table)
-    val deltas = deltaTables(spark, dir, seqs, "terms", Some(table))
-    if (deltas.isEmpty) return base
-    val changes = spark.read.parquet(deltas: _*)
-      .select("termId", "term", "tlen", "df")
-      .as[(Long, String, Option[Int], Long)].collect()
-      .groupMapReduce(_._1)(c => (c._2, c._3, c._4))((a, b) =>
-        (Option(a._1).getOrElse(b._1), a._2.orElse(b._2), a._3 + b._3))
-    val tlen = if (base.columns.contains("tlen")) col("tlen")
-      else octet_length(col("term"))
-    base.select(col("termId"), col("term"), col("df"), tlen.as("tlen"))
-      .as[(Long, String, Long, Int)]
-      .mapPartitions(_.flatMap { case (id, t, df, len) =>
-        Some((id, t, df + changes.get(id).fold(0L)(_._3), len))
-          .filter(_._3 > 0)
-      })
-      .union(changes.toSeq.collect { case (id, (t, len, d))
-        if t != null && d > 0 => (id, t, d, len.getOrElse(0)) }.toDS())
-      .toDF("termId", "term", "df", "tlen")
+
+    private def seqDirs(table: String): Seq[String] =
+      seqs.map(s => s"${seqPath(dir, s)}/$table")
+
+    /** The `table` of every delta in the snapshot, `seq` column
+      * included; None without deltas.
+      */
+    def deltas(table: String): Option[DataFrame] =
+      if (seqs.isEmpty) None
+      else Some(spark.read.parquet(seqDirs(table): _*))
+
+    /** Delta blocks (TermBlock columns + `seq`); None when no deltas. */
+    def deltaBlocks: Option[DataFrame] = deltas("blocks")
+
+    /** `base` with `_seq` = 0, union `delta`'s rows with `_seq` = their
+      * seq, on base's columns: the layer column [[live]] reads.
+      */
+    def layered(base: DataFrame, delta: Option[DataFrame]): DataFrame = {
+      val cols = base.columns.toSeq.map(col) :+ col("_seq")
+      val b = base.withColumn("_seq", lit(0))
+      delta.fold(b)(d => b.unionByName(
+        d.withColumn("_seq", col("seq").cast("int")).select(cols: _*)))
+    }
+
+    /** Tombstone ROW count across the snapshot's deltas, summed from
+      * parquet footers — no Spark job ([[parquetRows]]). removed/ + docs/:
+      * [[tombstones]] derives an add-tombstone per doc row, so the
+      * liveness working set the overflow gate bounds includes both sides.
+      * Upper-bounds the distinct-docId tombstone working set.
+      */
+    lazy val tombRows: Long =
+      parquetRows(spark, seqDirs("removed") ++ seqDirs("docs"))
+
+    /** True when the tombstone working set is too large to collect to the
+      * driver (`graft.maxDriverTombstones`, default 10M ≈ 120 MB of map
+      * entries). Compaction normally folds deltas long before this
+      * (min(fraction·docCount, tombstoneAbsoluteCap) trigger), but a
+      * maintenance lull under heavy churn must DEGRADE to the distributed
+      * liveness join, not OOM the driver: [[live]] drops its broadcast
+      * hint, [[tombMap]] stays empty, and [[graft.query.Wand.topKArray]]
+      * co-partitions [[tombstones]] with blocks by docId bucket.
+      */
+    lazy val overflow: Boolean = tombRows > maxDriverTombstones(spark)
+
+    /** (docId, tombSeq = max tombstone seq) — the small side of every
+      * liveness join; None when no deltas.
+      *
+      * The set unions the WRITTEN kill tombstones (`removed/`) with
+      * DERIVED entries (docId, seq) from each delta's `docs/` table: every
+      * docId a delta writes — docs merely ADDED included — reads as
+      * tombstoned at its seq. For an add this changes nothing in normal
+      * state, but it upholds the invariant the fold's restart/lost-marker
+      * safety rests on (see [[compactedThrough]]). Deriving (instead of
+      * writing add rows into `removed/`) keeps the kill set pure for the
+      * compaction trigger and retrofits the invariant onto deltas
+      * committed by older writers.
+      */
+    def tombstones: Option[DataFrame] = kills.map { removed =>
+      val f = fs(spark, dir)
+      // hand-crafted/degenerate deltas may lack docs/ — skip, don't fail
+      val docsDirs = seqDirs("docs").filter(p => f.exists(new Path(p)))
+      val sides =
+        if (docsDirs.isEmpty) removed
+        else removed.unionByName(spark.read.parquet(docsDirs: _*)
+          .select(col("docId"), col("seq")))
+      sides.groupBy("docId").agg(max(col("seq")).cast("int").as("tombSeq"))
+    }
+
+    /** WRITTEN kill tombstones only (replaced/removed docs — no derived
+      * add entries), ungrouped (docId, seq). This is the read the
+      * compaction TRIGGER wants: a pure-add delta kills nothing and must
+      * not drag the fold forward.
+      */
+    def kills: Option[DataFrame] =
+      deltas("removed").map(_.select(col("docId"), col("seq")))
+
+    /** docId → latest tombstone seq, collected to the driver on first use
+      * — the WAND decode filter's input. Bounded by compaction
+      * (min(fraction·docCount, tombstoneAbsoluteCap) triggers a fold) AND
+      * by [[overflow]], under which it is empty and the distributed path
+      * takes over; empty on fresh builds too.
+      */
+    lazy val tombMap: Map[Long, Int] =
+      if (overflow) Map.empty
+      else tombstones.fold(Map.empty[Long, Int])(
+        _.as[(Long, Int)].collect().toMap)
+
+    // the tombstone side live() joins: the collected rows on a handle's
+    // snapshot, else read from the snapshot's parquet in the join itself
+    private lazy val collectedSide: Option[DataFrame] =
+      Some(tombMap).filter(_.nonEmpty)
+        .map(_.toSeq.toDF("docId", "tombSeq"))
+    private def liveSide: Option[DataFrame] =
+      if (collectTombstones && !overflow) collectedSide else tombstones
+
+    /** Applies the liveness rule to a frame carrying a `_seq` layer column
+      * ([[layered]]): a row from layer r is live iff r >= tombSeq(docId)
+      * (0 when none). The tombstone side is usually small and broadcast —
+      * but a maintenance lull under heavy churn can leave more tombstones
+      * than the driver can collect (a broadcast build side IS a driver
+      * collect). Past [[overflow]] the hint is dropped so Spark picks a
+      * shuffled join — how the overflowed compaction that CLEARS the lull
+      * reads. The layer columns keep their order; `_seq` goes.
+      */
+    def live(layers: DataFrame): DataFrame = {
+      val out = layers.columns.toSeq.filter(_ != "_seq").map(col)
+      liveSide match {
+        case None => layers.select(out: _*)
+        case Some(t) =>
+          layers.join(if (overflow) t else broadcast(t), Seq("docId"), "left")
+            .filter(col("_seq") >= coalesce(col("tombSeq"), lit(0)))
+            .select(out: _*)
+      }
+    }
+
+    private lazy val postingGroups: Int =
+      IndexBuilder.readMeta(spark, dir)("postingGroups").toInt
+    private def groupDirs: Seq[String] = (0 until postingGroups)
+      .map(i => s"${IndexBuilder.postingsPath(dir)}/group=$i")
+
+    /** Live postings across base + deltas: (termId, docId, tf, docLen). */
+    def postings: DataFrame = live(layered(
+      spark.read.parquet(groupDirs: _*)
+        .select("termId", "docId", "tf", "docLen"),
+      deltas("postings")))
+
+    /** Every posting stored, from parquet footers (no Spark job): base
+      * groups plus delta layers, dead postings of replaced docs included
+      * until compaction drops them.
+      */
+    def storedPostings: Long =
+      parquetRows(spark, groupDirs ++ seqDirs("postings"))
+
+    private def docLayers: DataFrame = layered(spark.read
+      .parquet(IndexBuilder.docsPath(dir)).select(docCols.map(col): _*),
+      deltas("docs"))
+
+    /** Live docs table across base + deltas. */
+    def docs: DataFrame = live(docLayers)
+
+    /** Every doc row ever written (dead included) — for max-docId
+      * assignment, so a purged doc's id is never handed to a new url while
+      * tombstones that mention it are still live.
+      */
+    def docsAllLayers: DataFrame = docLayers.drop("_seq")
+
+    /** The `name` tables of the deltas above the stamp of `stampOf`. */
+    private def deltaTables(
+        name: String, stampOf: Option[String]): Seq[String] = {
+      val f = fs(spark, dir)
+      val through =
+        stampOf.fold(0L)(t => readNumber(f, new Path(stampPath(t))))
+      seqs.filter(_ > through).map(s => s"${seqPath(dir, s)}/$name")
+        .filter(t => f.exists(new Path(t)))
+    }
+
+    /** The dictionary readers see, (termId, term, df, tlen): the base plus
+      * the signed df changes of the deltas above its stamp. The changes are
+      * summed on the driver — O(batch × visible seqs), bounded by compaction
+      * — and applied to the base in one narrow pass, with no shuffle: terms
+      * new in a delta are appended, rows whose df falls to 0 are dropped.
+      * With no such delta this is the base read as written.
+      */
+    def terms: DataFrame = {
+      val table = IndexBuilder.termsPath(dir)
+      val base = spark.read.parquet(table)
+      val tables = deltaTables("terms", Some(table))
+      if (tables.isEmpty) return base
+      val changes = spark.read.parquet(tables: _*)
+        .select("termId", "term", "tlen", "df")
+        .as[(Long, String, Option[Int], Long)].collect()
+        .groupMapReduce(_._1)(c => (c._2, c._3, c._4))((a, b) =>
+          (Option(a._1).getOrElse(b._1), a._2.orElse(b._2), a._3 + b._3))
+      val tlen = if (base.columns.contains("tlen")) col("tlen")
+        else octet_length(col("term"))
+      base.select(col("termId"), col("term"), col("df"), tlen.as("tlen"))
+        .as[(Long, String, Long, Int)]
+        .mapPartitions(_.flatMap { case (id, t, df, len) =>
+          Some((id, t, df + changes.get(id).fold(0L)(_._3), len))
+            .filter(_._3 > 0)
+        })
+        .union(changes.toSeq.collect { case (id, (t, len, d))
+          if t != null && d > 0 => (id, t, d, len.getOrElse(0)) }.toDS())
+        .toDF("termId", "term", "df", "tlen")
+    }
+
+    /** (docCount, totalTokens) readers see: the base row plus the signed
+      * changes of the deltas above its stamp.
+      */
+    def stats: Stats = {
+      val table = IndexBuilder.statsPath(dir)
+      val tables = deltaTables("stats", Some(table))
+      if (tables.isEmpty) spark.read.parquet(table).as[Stats].head()
+      else spark.read.parquet(table +: tables: _*)
+        .agg(sum("docCount").cast("long").as("docCount"),
+          sum("totalTokens").cast("long").as("totalTokens"))
+        .as[Stats].head()
+    }
+
+    /** Every termId of the base and the visible terms deltas, zero-df rows
+      * included: new terms are numbered above all of them, as
+      * [[docsAllLayers]] does for docs — a dropped term keeps its base row
+      * until the fold, and reusing its id would give one termId two names.
+      */
+    def termIdsAllLayers: DataFrame = {
+      val base =
+        spark.read.parquet(IndexBuilder.termsPath(dir)).select("termId")
+      val tables = deltaTables("terms", None)
+      if (tables.isEmpty) base
+      else base.union(spark.read.parquet(tables: _*).select("termId"))
+    }
   }
-
-  def termsView(spark: SparkSession, dir: String): DataFrame =
-    termsView(spark, dir, listSeqs(spark, dir))
-
-  /** (docCount, totalTokens) readers see: the base row plus the signed
-    * changes of the deltas above its stamp.
-    */
-  def statsView(spark: SparkSession, dir: String, seqs: Seq[Int]): Stats = {
-    import spark.implicits._
-    val table = IndexBuilder.statsPath(dir)
-    val deltas = deltaTables(spark, dir, seqs, "stats", Some(table))
-    if (deltas.isEmpty) spark.read.parquet(table).as[Stats].head()
-    else spark.read.parquet(table +: deltas: _*)
-      .agg(sum("docCount").cast("long").as("docCount"),
-        sum("totalTokens").cast("long").as("totalTokens"))
-      .as[Stats].head()
-  }
-
-  def statsView(spark: SparkSession, dir: String): Stats =
-    statsView(spark, dir, listSeqs(spark, dir))
-
-  /** Every termId of the base and the visible terms deltas, zero-df rows
-    * included: new terms are numbered above all of them, as
-    * [[docsAllLayers]] does for docs — a dropped term keeps its base row
-    * until the fold, and reusing its id would give one termId two names.
-    */
-  def termIdsAllLayers(
-      spark: SparkSession, dir: String, seqs: Seq[Int]): DataFrame = {
-    val base = spark.read.parquet(IndexBuilder.termsPath(dir)).select("termId")
-    val deltas = deltaTables(spark, dir, seqs, "terms", None)
-    if (deltas.isEmpty) base
-    else base.union(spark.read.parquet(deltas: _*).select("termId"))
-  }
-
-  /** Delta blocks (TermBlock columns + `seq`); None when no deltas. */
-  def deltaBlocks(
-      spark: SparkSession, dir: String, seqs: Seq[Int]): Option[DataFrame] =
-    if (seqs.isEmpty) None
-    else Some(spark.read
-      .parquet(seqs.map(s => s"${seqPath(dir, s)}/blocks"): _*))
 
   /** Writes one delta's DATA tables (postings + their encoded blocks +
-    * doc rows + df and stats changes). NOT visible to readers until
-    * [[commitDelta]] writes the `_committed` marker; a crash in between
-    * leaves an invisible half-written dir that the retry overwrites.
+    * doc rows + df and stats changes) and returns the postings written,
+    * from the footers. NOT visible to readers until [[commitDelta]] writes
+    * the `_committed` marker; a crash in between leaves an invisible
+    * half-written dir that the retry overwrites.
     */
   def writeDeltaData(
       spark: SparkSession,
@@ -533,7 +554,7 @@ object DeltaLog {
       statsDelta: Stats,
       blockSize: Int,
       bucketSize: Long,
-      parts: Int): Unit = {
+      parts: Int): Long = {
     val p = seqPath(dir, seq)
     // a retried seq must re-commit from scratch: drop any stale marker a
     // previous successful commit of this seq could have left (can only
@@ -562,6 +583,7 @@ object DeltaLog {
       .write.mode("overwrite").parquet(s"$p/terms")
     spark.createDataFrame(Seq(statsDelta))
       .write.mode("overwrite").parquet(s"$p/stats")
+    parquetRows(spark, Seq(s"$p/postings"))
   }
 
   /** COMMITS seq: writes the tombstone table, then — strictly after the

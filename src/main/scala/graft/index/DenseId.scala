@@ -21,61 +21,25 @@ object DenseId {
     */
   final case class Assigned(df: DataFrame, release: () => Unit)
 
-  /** Returns (key, id) for every distinct key of `keys`. Pass
-    * `inputDistinct = true` when the caller guarantees unique keys (e.g.
-    * one marker row per url) — skips a full dedup shuffle.
+  /** Returns (key, id) for every distinct key of `keys`: the rank
+    * assignment of [[assignWithPayload]] over the distinct keys.
     */
   def assign(
       spark: SparkSession,
       keys: Dataset[String],
       partitions: Int,
       idName: String = "id",
-      keyName: String = "key",
-      inputDistinct: Boolean = false): Assigned = {
+      keyName: String = "key"): Assigned = {
     import spark.implicits._
-
-    val sorted = (if (inputDistinct) keys else keys.distinct())
-      .repartitionByRange(partitions, col("value"))
-      .sortWithinPartitions("value")
-
-    val indexed: Dataset[(Int, Long, String)] = sorted.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      var i = -1L
-      it.map { k =>
-        i += 1
-        (pid, i, k)
-      }
-    }
-    indexed.persist(StorageLevel.MEMORY_AND_DISK)
-
-    val counts: Map[Int, Long] = indexed
-      .groupBy($"_1")
-      .agg(count(lit(1)).as("c"))
-      .as[(Int, Long)]
-      .collect()
-      .toMap
-    // prefix sum in partition-index order = global sorted order
-    val maxPid = if (counts.isEmpty) -1 else counts.keys.max
-    val offsets = new Array[Long](maxPid + 2)
-    var acc = 0L
-    var p = 0
-    while (p <= maxPid) {
-      offsets(p) = acc
-      acc += counts.getOrElse(p, 0L)
-      p += 1
-    }
-    val bOffsets = spark.sparkContext.broadcast(offsets)
-
-    val out = indexed
-      .map { case (pid, localIdx, k) => (k, bOffsets.value(pid) + localIdx) }
-      .toDF(keyName, idName)
-    Assigned(out, () => { indexed.unpersist(); bOffsets.destroy() })
+    val rows = assignWithPayload(keys.distinct(), "value", partitions)
+    Assigned(rows.ds.toDF(idName, keyName).select(keyName, idName),
+      rows.release)
   }
 
   /** Result rows + release hook for [[assignWithPayload]]. */
   final case class AssignedRows[T](ds: Dataset[(Long, T)], release: () => Unit)
 
-  /** Same rank assignment, fused with the row payload: range-sorts rows
+  /** The rank assignment, fused with the row payload: range-sorts rows
     * (unique by `keyCol`) and attaches id = global sorted rank of the key,
     * carrying every other column through the sort — so callers that need
     * (id, payload) skip the join-back that `assign` forces (for the docs

@@ -68,9 +68,9 @@ object Incremental {
         DeltaLog.listSeqs(spark, indexDir).nonEmpty)
       compact(spark, indexDir, conf)
 
-    val seqs = DeltaLog.listSeqs(spark, indexDir)
-    val docs = DeltaLog.docsView(spark, indexDir, seqs)
-    val postingsOld = DeltaLog.postingsView(spark, indexDir, seqs)
+    val snap = DeltaLog.snapshot(spark, indexDir)
+    val docs = snap.docs
+    val postingsOld = snap.postings
       .select($"termId", $"docId", $"tf", $"docLen")
 
     // last-write-wins per-url dedup, same as build(): a snapshot with two
@@ -150,7 +150,7 @@ object Incremental {
     // above the previous max over EVERY layer ever written (dead included
     // — a live tombstone must never shadow a reused id). A3 holds:
     // empty/malformed docs never surface in ftDelta → no id, not indexed.
-    val maxDocId = DeltaLog.docsAllLayers(spark, indexDir)
+    val maxDocId = snap.docsAllLayers
       .agg(coalesce(max($"docId"), lit(-1L))).as[Long].collect()
       .headOption.getOrElse(-1L) // empty initial index → ids start at 0
     val withOld = docLenDelta.join(
@@ -199,10 +199,10 @@ object Incremental {
       Stats(deltaDocs - nAffected, deltaTokens - removedTokens)
 
     // termId assignment for brand-new terms
-    val termsOld = DeltaLog.termsView(spark, indexDir, seqs)
+    val termsOld = snap.terms
     val termDeltaNames = ftDelta.select($"term").distinct()
       .join(termsOld.select($"term"), Seq("term"), "left_anti")
-    val maxTermId = DeltaLog.termIdsAllLayers(spark, indexDir, seqs)
+    val maxTermId = snap.termIdsAllLayers
       .agg(coalesce(max($"termId"), lit(-1L))).as[Long].head()
     val newTermIds = DenseId.assign(spark,
       termDeltaNames.select($"term".as("value")).as[String],
@@ -249,7 +249,7 @@ object Incremental {
     // orphans); a crash after 2 leaves stale meta, which recover()
     // rebuilds from the views.
     val seq = DeltaLog.nextSeq(spark, indexDir)
-    DeltaLog.writeDeltaData(spark, indexDir, seq,
+    val nPostingsAdd = DeltaLog.writeDeltaData(spark, indexDir, seq,
       postingsAdd = postingsAdd,
       docsAdd = docsDelta.select($"docId", $"url", $"warc_ts", $"docLen"),
       termsDelta = dfChange.filter($"plus" =!= $"minus")
@@ -262,8 +262,9 @@ object Incremental {
         conf.partitions / math.max(1, meta("postingGroups").toInt))))
     // the tombstone table holds only KILLS; docs ADDED at this seq are
     // tombstoned too, derived at read time from this delta's docs/ table
-    // ([[DeltaLog.tombstonesDf]]) — what keeps the fold idempotent for adds
-    // while removed/ stays the kill set the compaction trigger counts
+    // ([[DeltaLog.Snapshot.tombstones]]) — what keeps the fold idempotent
+    // for adds while removed/ stays the kill set the compaction trigger
+    // counts
     DeltaLog.commitDelta(spark, indexDir, seq, tombstones = affectedOld)
 
     // meta refresh: handle caches validate against meta.json, and the
@@ -276,9 +277,7 @@ object Incremental {
         count(when($"dfOld" === 0L && $"plus" > $"minus", 1)),
         count(when($"dfOld" > 0L && $"dfOld" + $"plus" - $"minus" <= 0L, 1)))
       .as[(Long, Long, Long)].head()
-    val nPostingsAdd = DeltaLog.parquetRows(spark,
-      Seq(s"${DeltaLog.seqPath(indexDir, seq)}/postings"))
-    val statsOld = DeltaLog.statsView(spark, indexDir, seqs)
+    val statsOld = snap.stats
     val statsNew = Stats(statsOld.docCount + statsDelta.docCount,
       statsOld.totalTokens + statsDelta.totalTokens)
     IndexBuilder.updateMeta(spark, indexDir, Map(
@@ -305,17 +304,15 @@ object Incremental {
     // what the query handles collect) crossed the cap the handles gate on:
     // a pure-add bulk ingest must not pin queries on the distributed path
     // for up to deltaCompactEvery more updates (footer counts, no job)
-    val visibleSeqs = DeltaLog.listSeqs(spark, indexDir)
-    val tombCount = DeltaLog.killTombstonesDf(spark, indexDir, visibleSeqs)
+    val visible = DeltaLog.snapshot(spark, indexDir)
+    val tombCount = visible.kills
       .map(_.select($"docId").distinct().count()).getOrElse(0L)
     val tombTrigger = math.min(
       conf.tombstoneCompactFraction * math.max(1L, statsNew.docCount),
       conf.tombstoneAbsoluteCap.toDouble)
-    val derivedRows = DeltaLog.tombRowCount(spark, indexDir, visibleSeqs)
     val shouldCompact =
-      visibleSeqs.size >= conf.deltaCompactEvery ||
-        tombCount > tombTrigger ||
-        derivedRows > DeltaLog.maxDriverTombstones(spark)
+      visible.seqs.size >= conf.deltaCompactEvery ||
+        tombCount > tombTrigger || visible.overflow
     if (shouldCompact) compact(spark, indexDir, conf)
 
     UpdateReport(
@@ -340,20 +337,20 @@ object Incremental {
       conf: IndexBuilder.BuildConf = IndexBuilder.BuildConf()): Unit = {
     import spark.implicits._
     recover(spark, indexDir) // a crashed commit must be rolled forward first
-    val seqs = DeltaLog.listSeqs(spark, indexDir)
-    if (seqs.isEmpty) return
+    val snap = DeltaLog.snapshot(spark, indexDir)
+    if (snap.seqs.isEmpty) return
     val meta = IndexBuilder.readMeta(spark, indexDir)
     val g = meta("postingGroups").toInt
     val blockSize = meta("blockSize").toInt
     val perGroupParts = math.max(1, conf.partitions / g)
 
     // materialize the live views BEFORE overwriting the base files they read
-    val live = DeltaLog.postingsView(spark, indexDir, seqs)
+    val live = snap.postings
       .select($"termId", $"docId", $"tf".cast("int").as("tf"),
         $"docLen".cast("int").as("docLen"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     live.count()
-    val docsLive = DeltaLog.docsView(spark, indexDir, seqs)
+    val docsLive = snap.docs
       .persist(StorageLevel.MEMORY_AND_DISK)
     docsLive.count()
 
@@ -398,13 +395,12 @@ object Incremental {
       docsLive.write.mode("overwrite").parquet(_))
     // terms and stats: each view is staged, stamped and swapped with its
     // data, so a restarted fold or a reader before clear() adds no delta twice
-    val stats = Seq(DeltaLog.statsView(spark, indexDir, seqs)).toDF()
+    val stats = Seq(snap.stats).toDF()
     writeTemp(spark, IndexBuilder.termsPath(indexDir))(
-      IndexBuilder.writeTermsBase(spark,
-        DeltaLog.termsView(spark, indexDir, seqs), _, conf.partitions / 4,
-        seqs.last))
+      IndexBuilder.writeTermsBase(spark, snap.terms, _, conf.partitions / 4,
+        snap.seqs.last))
     writeTemp(spark, IndexBuilder.statsPath(indexDir))(
-      IndexBuilder.writeStatsBase(spark, stats, _, seqs.last))
+      IndexBuilder.writeStatsBase(spark, stats, _, snap.seqs.last))
     DeltaLog.clear(spark, indexDir)
     // the compacted floor is recorded REDUNDANTLY here: meta.json and the
     // _compacted marker each alone carry it (compactedThrough takes the
@@ -470,21 +466,19 @@ object Incremental {
     * maintenance here.
     */
   def recover(spark: SparkSession, indexDir: String): Unit = {
-    val visible = DeltaLog.listSeqs(spark, indexDir)
-    val metaDrift = visible.nonEmpty &&
+    val snap = DeltaLog.snapshot(spark, indexDir)
+    val metaDrift = snap.seqs.nonEmpty &&
       IndexBuilder.readMeta(spark, indexDir)
         .get("deltaSeq").flatMap(s =>
-          scala.util.Try(s.toInt).toOption).getOrElse(0) < visible.last
+          scala.util.Try(s.toInt).toOption).getOrElse(0) < snap.seqs.last
     if (metaDrift) {
-      val stats = DeltaLog.statsView(spark, indexDir, visible)
+      val stats = snap.stats
       IndexBuilder.updateMeta(spark, indexDir, Map(
         "docCount" -> stats.docCount.toString,
         "totalTokens" -> stats.totalTokens.toString,
-        "termCount" ->
-          DeltaLog.termsView(spark, indexDir, visible).count().toString,
-        "postingCount" ->
-          DeltaLog.postingsView(spark, indexDir, visible).count().toString,
-        "deltaSeq" -> visible.last.toString))
+        "termCount" -> snap.terms.count().toString,
+        "postingCount" -> snap.postings.count().toString,
+        "deltaSeq" -> snap.seqs.last.toString))
       graft.query.IndexHandles.invalidate(indexDir)
     }
     // a compaction that crashed AFTER folding + clearing but BEFORE its
@@ -493,7 +487,7 @@ object Incremental {
     // and drop the intent. (An intent WITH deltas still visible means the
     // fold itself was interrupted; update()/compact() restart it.)
     readCompactingIntent(spark, indexDir) match {
-      case Some(b) if DeltaLog.listSeqs(spark, indexDir).isEmpty =>
+      case Some(b) if snap.seqs.isEmpty =>
         val floor = DeltaLog.compactedThrough(spark, indexDir)
         IndexBuilder.updateMeta(spark, indexDir, Map(
           "bucketSize" -> b.toString,

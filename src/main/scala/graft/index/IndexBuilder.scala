@@ -308,7 +308,8 @@ object IndexBuilder {
         }
         ()
       }))
-    val statsRow = DeltaLog.statsView(spark, indexDir)
+    val snap = DeltaLog.snapshot(spark, indexDir)
+    val statsRow = snap.stats
     val bucketSize = math.max(
       1L, (statsRow.docCount + conf.queryBuckets - 1) / conf.queryBuckets)
 
@@ -341,7 +342,7 @@ object IndexBuilder {
     val perPartMax = if (partCounts.isEmpty) 0L else partCounts.max
     // one scan for every dictionary metric (termCount + df skew)
     val (termCount, dfStats) = {
-      val r = DeltaLog.termsView(spark, indexDir)
+      val r = snap.terms
         .agg(count(lit(1)).as("n"), max($"df").as("m"), avg($"df").as("a"))
         .as[(Long, Option[Long], Option[Double])].collect()(0)
       (r._1, (r._2.getOrElse(0L), r._3.getOrElse(0.0)))
@@ -418,7 +419,7 @@ object IndexBuilder {
     * `tlen ≤ maxLen` prunes whole parquet row groups / cache batches at
     * huge dictionaries (SURVEY §7.4 risk 7 — the reference scans its
     * entire gtf per token), and stamped with `through`, the highest delta
-    * seq it includes ([[DeltaLog.termsView]]).
+    * seq it includes ([[DeltaLog.Snapshot.terms]]).
     */
   private[index] def writeTermsBase(spark: SparkSession, terms: DataFrame,
       dest: String, parts: Int, through: Int): Unit = {

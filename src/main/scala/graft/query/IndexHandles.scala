@@ -10,17 +10,15 @@ import org.apache.spark.storage.StorageLevel
 import graft.index.{DeltaLog, IndexBuilder}
 import graft.index.Schema.{Stats, TermBlock}
 
-/** Hot query-side state of one index: meta + stats are collected once;
-  * the dictionary and docs tables are persisted in memory (they're the
-  * per-query serving working set — on a cluster these are the natural
-  * executor-cache residents, while postings/blocks stay on storage and are
-  * read group-pruned per query). Merge-on-read deltas ([[DeltaLog]]) are
-  * snapshotted at handle construction: the delta frames, the dictionary
-  * and stats views ([[DeltaLog.termsView]], [[DeltaLog.statsView]]) and
-  * the tombstone map the WAND decode filter needs are loaded once per
-  * index version
-  * (meta.deltaSeq changes per update, so the meta-validated cache swaps
-  * handles on every commit).
+/** Hot query-side state of one index version: meta and stats are
+  * collected once; the dictionary and docs tables are persisted in memory
+  * (they're the per-query serving working set — on a cluster these are
+  * the natural executor-cache residents, while postings/blocks stay on
+  * storage and are read group-pruned per query). Every read of base +
+  * deltas goes through the one [[DeltaLog.Snapshot]] taken at
+  * construction (seq listing, layer union, tombstones, liveness rule);
+  * meta.deltaSeq changes per update, so the meta-validated cache swaps
+  * handles on every commit.
   */
 final class IndexHandles private (
     val spark: SparkSession,
@@ -30,57 +28,14 @@ final class IndexHandles private (
   val meta: Map[String, String] = IndexBuilder.readMeta(spark, indexDir)
   val postingGroups: Int = meta("postingGroups").toInt
 
-  /** The ONE delta-seq listing this handle is built from: every derived
-    * frame (tombstones, docs view, delta blocks, postingsFor layers) is
-    * passed this snapshot explicitly, so a delta commit landing while the
-    * handle is constructed can never pair seq-N data files with a
-    * tombstone set missing seq N (which would score a replaced doc from
-    * both its old and new layers until the next handle swap).
-    */
-  val deltaSeqs: Seq[Int] = DeltaLog.listSeqs(spark, indexDir)
+  val snapshot: DeltaLog.Snapshot =
+    DeltaLog.snapshot(spark, indexDir, collectTombstones = true)
 
-  /** Tombstone ROW count across the snapshot's deltas, summed from parquet
-    * footers — no Spark job (shared, status-keyed-memoized implementation
-    * in [[DeltaLog.tombRowCount]]). Upper-bounds the distinct-docId
-    * tombstone working set, so it gates the driver collect below.
-    */
-  val tombRows: Long =
-    if (deltaSeqs.isEmpty) 0L
-    else DeltaLog.tombRowCount(spark, indexDir, deltaSeqs)
+  /** [[DeltaLog.Snapshot.overflow]]: WAND skips its driver-local path. */
+  def tombOverflow: Boolean = snapshot.overflow
 
-  /** True when the tombstone working set is too large to collect to the
-    * driver (`graft.maxDriverTombstones`, default 10M ≈ 120 MB of map
-    * entries). Compaction normally folds deltas long before this
-    * (min(fraction·docCount, tombstoneAbsoluteCap) trigger), but a
-    * maintenance lull under heavy churn must DEGRADE to the distributed
-    * liveness join, not OOM the driver: [[Wand.topKArray]] skips the
-    * driver-local path and co-partitions tombstones with blocks by docId
-    * bucket; [[postingsFor]] joins the tombstone frame without a
-    * broadcast hint.
-    */
-  val tombOverflow: Boolean =
-    tombRows > DeltaLog.maxDriverTombstones(spark)
-
-  /** docId → latest tombstone seq; a row from layer r is live iff
-    * r >= tombSeq(docId). Compaction-bounded small; empty on fresh builds
-    * AND under [[tombOverflow]] (the distributed path takes over).
-    */
-  val tombMap: Map[Long, Int] =
-    if (deltaSeqs.isEmpty || tombOverflow) Map.empty
-    else DeltaLog.tombstoneMap(spark, indexDir, deltaSeqs)
-
-  /** Snapshot tombstone frame: rebuilt from the collected map when small
-    * (broadcast-joined), read straight from the snapshot's parquet when
-    * overflowed (regular join — Spark picks SMJ/SHJ).
-    */
-  private[query] val tombDf: Option[DataFrame] =
-    if (deltaSeqs.isEmpty) None
-    else if (tombOverflow) DeltaLog.tombstonesDf(spark, indexDir, deltaSeqs)
-    else if (tombMap.isEmpty) None
-    else {
-      import spark.implicits._
-      Some(tombMap.toSeq.toDF("docId", "tombSeq"))
-    }
+  /** [[DeltaLog.Snapshot.tombMap]], collected at construction. */
+  val tombMap: Map[Long, Int] = snapshot.tombMap
 
   /** Handle-scoped broadcast of [[tombMap]] for the distributed WAND path.
     * The map is immutable per index version, so a per-QUERY
@@ -103,7 +58,7 @@ final class IndexHandles private (
     b
   }
 
-  val stats: Stats = DeltaLog.statsView(spark, indexDir, deltaSeqs)
+  val stats: Stats = snapshot.stats
 
   // cached partition counts sized to the data (~1M rows per cached
   // partition), not to the writer's partitioning — a small dictionary must
@@ -139,7 +94,7 @@ final class IndexHandles private (
     // Levenshtein scan on 2 of 32 cores (measured 710 ms p50; 32-way
     // parallelism cut it ~5×). Size to the session's parallelism so every
     // core works the scan.
-    val raw = DeltaLog.termsView(spark, indexDir, deltaSeqs)
+    val raw = snapshot.terms
     val sized =
       if (rows <= maxDriverDictTerms) raw.coalesce(parts(rows))
       else {
@@ -171,19 +126,13 @@ final class IndexHandles private (
     * corpus — above ~50M docs (≈ a few GB) it must not compete with
     * execution memory, so pin it to disk-backed storage only.
     */
-  val docs: DataFrame = {
-    val base = spark.read
-      .parquet(IndexBuilder.docsPath(indexDir))
-    val live =
-      if (deltaSeqs.isEmpty) base.select("docId", "url")
-      else DeltaLog.docsView(spark, indexDir, deltaSeqs)
-        .select("docId", "url")
-    salted(live.coalesce(parts(meta("docCount").toLong)))
+  val docs: DataFrame =
+    salted(snapshot.docs.select("docId", "url")
+      .coalesce(parts(meta("docCount").toLong)))
       .persist(
         if (meta("docCount").toLong <= 50000000L)
           StorageLevel.MEMORY_AND_DISK
         else StorageLevel.DISK_ONLY)
-  }
 
   // reader frames built ONCE per handle: re-creating them per query would
   // redo file listing + footer/schema reads (hundreds of ms of per-query
@@ -214,7 +163,7 @@ final class IndexHandles private (
   private val postingsDf: DataFrame =
     spark.read.parquet(IndexBuilder.postingsPath(indexDir))
   private val deltaBlocksDf: Option[DataFrame] =
-    DeltaLog.deltaBlocks(spark, indexDir, deltaSeqs)
+    snapshot.deltaBlocks
       .map(df => if (cacheBlocks)
         salted(df.coalesce(1)).persist(StorageLevel.MEMORY_AND_DISK)
       else df)
@@ -231,16 +180,10 @@ final class IndexHandles private (
     */
   def layeredBlocks(termIds: Option[Seq[Long]]): Dataset[(Int, TermBlock)] = {
     import spark.implicits._
-    val base = termIds.fold(blocksDf)(pruned(blocksDf, _))
-      .drop("group").withColumn("_seq", lit(0))
-    val layered = deltaBlocksDf match {
-      case None => base
-      case Some(d) =>
-        base.unionByName(
-          termIds.fold(d)(ids => d.filter(col("termId").isin(ids: _*)))
-            .withColumn("_seq", col("seq").cast("int")).drop("seq"))
-    }
-    layered.select(col("_seq").cast("int").as("_1"),
+    val base = termIds.fold(blocksDf)(pruned(blocksDf, _)).drop("group")
+    snapshot.layered(base, deltaBlocksDf.map(d =>
+        termIds.fold(d)(ids => d.filter(col("termId").isin(ids: _*)))))
+      .select(col("_seq").cast("int").as("_1"),
         struct(Encoders.product[TermBlock].schema.fieldNames.map(col): _*)
           .as("_2"))
       .as[(Int, TermBlock)]
@@ -276,15 +219,6 @@ final class IndexHandles private (
   private val fillPostings: Long =
     math.min(blockCacheCap, IndexHandles.FillMaxPostings)
 
-  /** Every posting the fill would hold, from parquet footers (no Spark
-    * job): base groups plus delta layers, dead postings of replaced docs
-    * included until compaction drops them.
-    */
-  private def storedPostings(): Long = DeltaLog.parquetRows(spark,
-    (0 until postingGroups)
-      .map(g => s"${IndexBuilder.postingsPath(indexDir)}/group=$g") ++
-      deltaSeqs.map(s => s"${DeltaLog.seqPath(indexDir, s)}/postings"))
-
   private def cacheBlocksOf(t: Long, bs: Array[(Int, TermBlock)]): Unit =
     // putIfAbsent: a concurrent query may have inserted t already —
     // counting both inserts would inflate the postings counter forever
@@ -299,7 +233,7 @@ final class IndexHandles private (
   // of the stored one) spares the footer reads on a big index
   private val blocksFilled = new IndexHandles.Once({
     val fits = meta("postingCount").toLong <= fillPostings &&
-      storedPostings() <= fillPostings
+      snapshot.storedPostings <= fillPostings
     if (fits) layeredBlocks(None).collect().groupBy(_._2.termId)
       .foreach { case (t, bs) => cacheBlocksOf(t, bs) }
     fits
@@ -375,39 +309,14 @@ final class IndexHandles private (
       .toMap
   }
 
-  /** Live candidate postings (liveness applied): the naive-scorer input.
-    *
-    * Deliberately NOT DeltaLog.withLiveness: that re-reads tombstones from
-    * disk per call, while a handle must apply the liveness rule with the
-    * SAME (deltaSeqs, tombDf) snapshot it was created with — otherwise a
-    * concurrent commit could pair new tombstones with an old layer list
-    * mid-query. Keep the rule itself (`_seq >= coalesce(tombSeq, 0)`)
-    * textually identical to DeltaLog.withLiveness when touching either.
+  /** Live candidate postings (liveness applied): the naive-scorer input,
+    * read through the handle's [[DeltaLog.Snapshot]].
     */
-  def postingsFor(termIds: Seq[Long]): DataFrame = {
-    val cols = Seq("termId", "docId", "tf", "docLen")
-    val base = pruned(postingsDf, termIds)
-    if (deltaSeqs.isEmpty) return base.select(cols.map(col): _*)
-    val deltaAll = spark.read.parquet(
-      deltaSeqs.map(s => s"${DeltaLog.seqPath(indexDir, s)}/postings"): _*)
-    val delta = deltaAll.filter(col("termId").isin(termIds: _*))
-    val layered = base.withColumn("_seq", lit(0))
-      .select((cols :+ "_seq").map(col): _*)
-      .unionByName(delta.withColumn("_seq", col("seq").cast("int"))
-        .select((cols :+ "_seq").map(col): _*))
-    tombDf match {
-      case None => layered.drop("_seq")
-      case Some(t) =>
-        // broadcast only the collected (bounded) map frame; an overflowed
-        // tombstone set stays a distributed join — broadcasting it would
-        // recreate the very driver/executor-memory problem the overflow
-        // gate exists to avoid
-        val side = if (tombOverflow) t else broadcast(t)
-        layered.join(side, Seq("docId"), "left")
-          .filter(col("_seq") >= coalesce(col("tombSeq"), lit(0)))
-          .select(cols.map(col): _*)
-    }
-  }
+  def postingsFor(termIds: Seq[Long]): DataFrame =
+    snapshot.live(snapshot.layered(
+      pruned(postingsDf, termIds).select("termId", "docId", "tf", "docLen"),
+      snapshot.deltas("postings")
+        .map(_.filter(col("termId").isin(termIds: _*)))))
 
   private def pruned(base: DataFrame, termIds: Seq[Long]): DataFrame = {
     val groups = termIds.map(_ % postingGroups).distinct

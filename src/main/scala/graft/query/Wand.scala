@@ -353,7 +353,7 @@ object Wand {
     val bucketSize = math.max(1L, h.meta("bucketSize").toLong)
     val blocks = h.layeredBlocks(Some(qp.terms.map(_.termId)))
       .map { case (seq, b) => BucketRow(b.bucket, seq, Some(b), -1L, 0) }
-    val tombs = h.tombDf.get
+    val tombs = h.snapshot.tombstones.get
       .select(col("docId").cast("long"), col("tombSeq").cast("int"))
       .as[(Long, Int)]
       .map { case (d, s) =>

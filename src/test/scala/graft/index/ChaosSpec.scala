@@ -97,10 +97,11 @@ class ChaosSpec extends AnyFunSuite {
 
   /** Flattened live postings as a sorted MULTISET (duplicates must show). */
   private def flatLive(dir: String): Seq[(String, String, Long, Long)] = {
-    val docs = DeltaLog.docsView(spark, dir).select($"docId", $"url")
-    val terms = DeltaLog.termsView(spark, dir)
+    val snap = DeltaLog.snapshot(spark, dir)
+    val docs = snap.docs.select($"docId", $"url")
+    val terms = snap.terms
       .select($"termId", $"term")
-    DeltaLog.postingsView(spark, dir)
+    snap.postings
       .join(docs, "docId").join(terms, "termId")
       .select($"url", $"term", $"tf".cast("long"), $"docLen".cast("long"))
       .as[(String, String, Long, Long)].collect().toSeq.sorted
@@ -119,10 +120,10 @@ class ChaosSpec extends AnyFunSuite {
       s"engine=${got.size} oracle=${want.size} " +
       s"onlyEngine=${(got.diff(want)).take(5)} " +
       s"onlyOracle=${(want.diff(got)).take(5)}")
-    val stats = DeltaLog.statsView(spark, dir)
+    val stats = DeltaLog.snapshot(spark, dir).stats
     assert(stats.docCount == m.docs.size.toLong, s"[$step] docCount")
     assert(stats.totalTokens == m.totalTokens, s"[$step] totalTokens")
-    val dfGot = DeltaLog.termsView(spark, dir)
+    val dfGot = DeltaLog.snapshot(spark, dir).terms
       .select($"term", $"df").as[(String, Long)].collect().toMap
     val dfWant = m.gtf.toMap
     assert(dfGot == dfWant, s"[$step] terms df diverge: " +

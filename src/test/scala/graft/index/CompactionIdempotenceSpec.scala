@@ -37,28 +37,29 @@ class CompactionIdempotenceSpec extends AnyFunSuite {
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def dupPostings(dir: String): Long =
-    DeltaLog.postingsView(spark, dir)
+    DeltaLog.snapshot(spark, dir).postings
       .groupBy($"termId", $"docId").count().filter($"count" > 1).count()
 
   private def dupDocs(dir: String): Long =
-    DeltaLog.docsView(spark, dir)
+    DeltaLog.snapshot(spark, dir).docs
       .groupBy($"url").count().filter($"count" > 1).count()
 
   /** Flattened live postings as a SORTED MULTISET — a Set comparison would
     * hide exactly the duplicates these scenarios produce.
     */
   private def flatLiveSeq(dir: String): Seq[(String, String, Int, Int)] = {
-    val docs = DeltaLog.docsView(spark, dir).select($"docId", $"url")
-    val terms = DeltaLog.termsView(spark, dir)
+    val snap = DeltaLog.snapshot(spark, dir)
+    val docs = snap.docs.select($"docId", $"url")
+    val terms = snap.terms
       .select($"termId", $"term")
-    DeltaLog.postingsView(spark, dir)
+    snap.postings
       .join(docs, "docId").join(terms, "termId")
       .select($"url", $"term", $"tf", $"docLen")
       .as[(String, String, Int, Int)].collect().toSeq.sorted
   }
 
   private def termDfs(dir: String): Seq[(String, Long)] =
-    DeltaLog.termsView(spark, dir).select($"term", $"df")
+    DeltaLog.snapshot(spark, dir).terms.select($"term", $"df")
       .as[(String, Long)].collect().toSeq.sorted
 
   private val v1: IndexedSeq[Synth.PageRow] = Synth.pages(60)
@@ -99,7 +100,7 @@ class CompactionIdempotenceSpec extends AnyFunSuite {
     Incremental.compact(spark, dir, conf)
     val before = flatLiveSeq(dir)
     val termsBefore = termDfs(dir)
-    val statsBefore = DeltaLog.statsView(spark, dir)
+    val statsBefore = DeltaLog.snapshot(spark, dir).stats
 
     // reconstruct "crashed between fold and clear": base already folded,
     // BOTH floor copies absent, intent durable with the fold's bucketSize
@@ -116,7 +117,7 @@ class CompactionIdempotenceSpec extends AnyFunSuite {
     // the refold wrote the same terms and stats bases: the stamp kept the
     // re-exposed deltas' df and stats changes from being added again
     assert(termDfs(dir) == termsBefore)
-    assert(DeltaLog.statsView(spark, dir) == statsBefore)
+    assert(DeltaLog.snapshot(spark, dir).stats == statsBefore)
 
     // and ≡ a fresh build of the same corpus
     val freshDir = java.nio.file.Files

@@ -82,8 +82,7 @@ class DeltaProtocolSpec extends AnyFunSuite {
       DeltaLog.removedPath(dir, 1) + "/_temporary/0")
     f.mkdirs(rm)
     assert(DeltaLog.listSeqs(spark, dir).isEmpty)
-    assert(DeltaLog.tombstonesDf(spark, dir, DeltaLog.listSeqs(spark, dir))
-      .isEmpty)
+    assert(DeltaLog.snapshot(spark, dir).tombstones.isEmpty)
     // recover() must not wedge on the unreadable half-delta
     Incremental.recover(spark, dir)
     assert(DeltaLog.listSeqs(spark, dir).isEmpty)
@@ -143,9 +142,9 @@ class DeltaProtocolSpec extends AnyFunSuite {
     def termDfs(frame: org.apache.spark.sql.DataFrame) =
       frame.select($"termId", $"term", $"df")
         .as[(Long, String, Long)].collect().toSeq.sorted
-    assert(termDfs(DeltaLog.termsView(spark, dir)) ==
+    assert(termDfs(DeltaLog.snapshot(spark, dir).terms) ==
       termDfs(spark.read.parquet(IndexBuilder.termsPath(dir))))
-    assert(DeltaLog.statsView(spark, dir) == spark.read
+    assert(DeltaLog.snapshot(spark, dir).stats == spark.read
       .parquet(IndexBuilder.statsPath(dir)).as[Schema.Stats].head())
   }
 
@@ -170,7 +169,7 @@ class DeltaProtocolSpec extends AnyFunSuite {
       page("b", "alpha gamma", 0), page("c", "beta gamma", 0))
     IndexBuilder.build(spark, spark.createDataset(init).toDF(), dir, noFold)
     init.foreach(add)
-    def idOf(term: String) = DeltaLog.termsView(spark, dir)
+    def idOf(term: String) = DeltaLog.snapshot(spark, dir).terms
       .filter($"term" === term).select($"termId").as[Long].collect().toSeq
     val maxId = spark.read.parquet(IndexBuilder.termsPath(dir))
       .agg(org.apache.spark.sql.functions.max($"termId")).as[Long].head()
@@ -205,16 +204,18 @@ class DeltaProtocolSpec extends AnyFunSuite {
       .createTempDirectory("graft_snapshot_").toString
     IndexBuilder.build(spark, df(v1), dir, conf)
     val baseDocs = spark.read.parquet(IndexBuilder.docsPath(dir)).count()
+    val empty = DeltaLog.snapshot(spark, dir) // taken before the commit
     Incremental.update(spark, df(v2), dir,
       conf.copy(deltaCompactEvery = 100))
-    val seqs = DeltaLog.listSeqs(spark, dir)
-    assert(seqs.nonEmpty)
+    val snap = DeltaLog.snapshot(spark, dir)
+    assert(snap.seqs.nonEmpty)
     // empty snapshot → base only, even though a committed delta exists
-    assert(DeltaLog.docsView(spark, dir, Nil).count() == baseDocs)
-    assert(DeltaLog.tombstonesDf(spark, dir, Nil).isEmpty)
-    assert(DeltaLog.deltaBlocks(spark, dir, Nil).isEmpty)
+    assert(empty.seqs.isEmpty)
+    assert(empty.docs.count() == baseDocs)
+    assert(empty.tombstones.isEmpty)
+    assert(empty.deltaBlocks.isEmpty)
     // full snapshot → live view
-    assert(DeltaLog.docsView(spark, dir, seqs).count() ==
+    assert(snap.docs.count() ==
       IndexBuilder.readMeta(spark, dir)("docCount").toLong)
   }
 
@@ -253,12 +254,13 @@ class DeltaProtocolSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       // under the default cap the hint is present (small side, broadcast)
-      assert(planOf(DeltaLog.postingsView(spark, dir))
+      assert(planOf(DeltaLog.snapshot(spark, dir).postings)
         .contains("BroadcastHashJoin"))
       spark.conf.set("graft.maxDriverTombstones", "0")
-      assert(!planOf(DeltaLog.postingsView(spark, dir)).contains("Broadcast"),
+      val snap = DeltaLog.snapshot(spark, dir)
+      assert(!planOf(snap.postings).contains("Broadcast"),
         "postingsView still broadcasts past the cap")
-      assert(!planOf(DeltaLog.docsView(spark, dir)).contains("Broadcast"),
+      assert(!planOf(snap.docs).contains("Broadcast"),
         "docsView still broadcasts past the cap")
       // the compaction that clears the lull must itself run overflowed
       Incremental.compact(spark, dir, conf)
@@ -290,7 +292,7 @@ class DeltaProtocolSpec extends AnyFunSuite {
     IndexHandles.invalidate(dir)
     try {
       val h = IndexHandles(spark, dir)
-      assert(h.tombRows > 0)
+      assert(h.snapshot.tombRows > 0)
       assert(h.tombOverflow)
       assert(h.tombMap.isEmpty) // the collect is skipped, not resized
       val oracle = oracleV2

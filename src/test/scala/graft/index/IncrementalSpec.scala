@@ -120,7 +120,7 @@ class IncrementalSpec extends AnyFunSuite {
     def flat(dir: String): Set[(String, String, Int, Int)] = {
       val docs = spark.read.parquet(IndexBuilder.docsPath(dir))
         .select($"docId", $"url")
-      val terms = DeltaLog.termsView(spark, dir)
+      val terms = DeltaLog.snapshot(spark, dir).terms
         .select($"termId", $"term")
       spark.read.parquet(IndexBuilder.postingsPath(dir))
         .join(docs, "docId").join(terms, "termId")
@@ -136,7 +136,7 @@ class IncrementalSpec extends AnyFunSuite {
 
   test("docs table ≡ fresh rebuild at (url, docLen) level; " +
       "stop-only doc gone, malformed doc keeps old version") {
-    val upd = DeltaLog.docsView(spark, updatedDir)
+    val upd = DeltaLog.snapshot(spark, updatedDir).docs
       .select($"url", $"docLen").as[(String, Long)].collect().toMap
     val fresh = spark.read.parquet(IndexBuilder.docsPath(freshDir))
       .select($"url", $"docLen").as[(String, Long)].collect().toMap
@@ -147,19 +147,20 @@ class IncrementalSpec extends AnyFunSuite {
   }
 
   test("terms ≡ fresh rebuild at (term, df) level") {
-    val upd = DeltaLog.termsView(spark, updatedDir)
+    val upd = DeltaLog.snapshot(spark, updatedDir).terms
       .select($"term", $"df").as[(String, Long)].collect().toMap
-    val fresh = DeltaLog.termsView(spark, freshDir)
+    val fresh = DeltaLog.snapshot(spark, freshDir).terms
       .select($"term", $"df").as[(String, Long)].collect().toMap
     assert(upd == fresh)
   }
 
   /** Live (merge-on-read) flattened postings of an index directory. */
   private def flatLive(dir: String): Set[(String, String, Int, Int)] = {
-    val docs = DeltaLog.docsView(spark, dir).select($"docId", $"url")
-    val terms = DeltaLog.termsView(spark, dir)
+    val snap = DeltaLog.snapshot(spark, dir)
+    val docs = snap.docs.select($"docId", $"url")
+    val terms = snap.terms
       .select($"termId", $"term")
-    DeltaLog.postingsView(spark, dir)
+    snap.postings
       .join(docs, "docId").join(terms, "termId")
       .select($"url", $"term", $"tf", $"docLen")
       .as[(String, String, Int, Int)].collect().toSet
@@ -220,7 +221,7 @@ class IncrementalSpec extends AnyFunSuite {
     val baseOnly = {
       val docs = spark.read.parquet(IndexBuilder.docsPath(dir))
         .select($"docId", $"url")
-      val terms = DeltaLog.termsView(spark, dir)
+      val terms = DeltaLog.snapshot(spark, dir).terms
         .select($"termId", $"term")
       spark.read.parquet(IndexBuilder.postingsPath(dir))
         .join(docs, "docId").join(terms, "termId")
@@ -263,12 +264,12 @@ class IncrementalSpec extends AnyFunSuite {
 
   test("blocks (base + delta layers, tombstones applied) decode to the " +
       "live postings view") {
-    val seqs = DeltaLog.listSeqs(spark, updatedDir)
-    val tomb = DeltaLog.tombstoneMap(spark, updatedDir, seqs)
+    val snap = DeltaLog.snapshot(spark, updatedDir)
+    val tomb = snap.tombMap
     val base = spark.read
       .parquet(IndexBuilder.blocksPath(updatedDir))
       .drop("group").withColumn("_seq", lit(0))
-    val delta = DeltaLog.deltaBlocks(spark, updatedDir, seqs).get
+    val delta = snap.deltaBlocks.get
       .withColumn("_seq", $"seq".cast("int")).drop("seq")
     val fromBlocks = base.unionByName(delta)
       .select($"_seq", struct($"termId", $"bucket", $"minDocId",
@@ -284,7 +285,7 @@ class IncrementalSpec extends AnyFunSuite {
         seq >= tomb.getOrElse(docId, 0) // liveness rule
       }
       .map { case (_, t, d, tf, dl) => (t, d, tf, dl) }.toSet
-    val fromPostings = DeltaLog.postingsView(spark, updatedDir)
+    val fromPostings = snap.postings
       .select($"termId", $"docId", $"tf", $"docLen")
       .as[(Long, Long, Int, Int)].collect().toSet
     assert(fromBlocks == fromPostings)
@@ -295,9 +296,9 @@ class IncrementalSpec extends AnyFunSuite {
     * (score, url) — rank identity is defined MODULO ties (SURVEY.md
     * §2.6.7). Compare untruncated lists as score-grouped url sets.
     */
-  private def assertOracleAnswer(q: String): Unit = {
+  private def assertOracleAnswer(q: String, useWand: Boolean = true): Unit = {
     val got = Search
-      .searchTop(spark, updatedDir, q, Search.Bm25, 100000)
+      .searchTop(spark, updatedDir, q, Search.Bm25, 100000, useWand = useWand)
       .select($"url", $"score").as[(String, Float)].collect().toVector
     val want = oracle.searchTop(q, RefModel.Bm25, 100000)
     def groups(v: Vector[(String, Float)]): Vector[(Float, Set[String])] =
@@ -315,7 +316,8 @@ class IncrementalSpec extends AnyFunSuite {
     // (with tombstones) under test
     test("query on updated index ≡ oracle with the per-term block fetch: " +
         s"\"$q\"") {
-      assert(graft.query.IndexHandles(spark, updatedDir).deltaSeqs.nonEmpty)
+      assert(graft.query.IndexHandles(spark, updatedDir).snapshot.seqs
+        .nonEmpty)
       spark.conf.set("graft.driverBlockCachePostings", "1")
       graft.query.IndexHandles.invalidate(updatedDir)
       try assertOracleAnswer(q)
@@ -323,6 +325,21 @@ class IncrementalSpec extends AnyFunSuite {
         spark.conf.unset("graft.driverBlockCachePostings")
         graft.query.IndexHandles.invalidate(updatedDir)
       }
+    }
+    // the naive scorer reads the handle's live postings (layers joined with
+    // the tombstones it collected)
+    test(s"query on updated index ≡ oracle with the naive scorer: \"$q\"") {
+      assertOracleAnswer(q, useWand = false)
+    }
+    // every query takes the bucketed WAND path, whose liveness filter is the
+    // handle's broadcast tombstone map (tombstones below the cap)
+    test("query on updated index ≡ oracle with forced distributed WAND: " +
+        s"\"$q\"") {
+      val h = graft.query.IndexHandles(spark, updatedDir)
+      assert(h.tombMap.nonEmpty && !h.tombOverflow)
+      spark.conf.set("graft.maxLocalWandPostings", "0")
+      try assertOracleAnswer(q)
+      finally spark.conf.unset("graft.maxLocalWandPostings")
     }
   }
 
@@ -346,7 +363,7 @@ class IncrementalSpec extends AnyFunSuite {
 
   /** (term, df) rows of the dictionary view, sorted — duplicates show. */
   private def termDfs(dir: String): Seq[(String, Long)] =
-    DeltaLog.termsView(spark, dir).select($"term", $"df")
+    DeltaLog.snapshot(spark, dir).terms.select($"term", $"df")
       .as[(String, Long)].collect().toSeq.sorted
 
   test("recover() rolls a crash-after-commit-marker forward: meta rebuilt " +
@@ -360,7 +377,7 @@ class IncrementalSpec extends AnyFunSuite {
     val seq = DeltaLog.listSeqs(spark, dir).last
     val good = IndexBuilder.readMeta(spark, dir)
     val expectedTerms = termDfs(dir)
-    val expectedStats = DeltaLog.statsView(spark, dir)
+    val expectedStats = DeltaLog.snapshot(spark, dir).stats
     // crash state: the marker committed, meta still the pre-update version
     restoreMeta(dir, staleMeta)
 
@@ -377,7 +394,7 @@ class IncrementalSpec extends AnyFunSuite {
     assert(!Incremental.update(spark, df(v2), dir, conf).changed)
     assert(DeltaLog.listSeqs(spark, dir) == Seq(seq))
     assert(termDfs(dir) == expectedTerms)
-    assert(DeltaLog.statsView(spark, dir) == expectedStats)
+    assert(DeltaLog.snapshot(spark, dir).stats == expectedStats)
   }
 
   test("an UNcommitted seq's terms/stats deltas are invisible: the retry " +
@@ -386,7 +403,7 @@ class IncrementalSpec extends AnyFunSuite {
       .createTempDirectory("graft_crash_back_").toString
     IndexBuilder.build(spark, df(v1), dir, conf)
     val before = termDfs(dir)
-    val statsBefore = DeltaLog.statsView(spark, dir)
+    val statsBefore = DeltaLog.snapshot(spark, dir).stats
     val staleMeta = metaJson(dir)
     assert(!Incremental.update(spark, df(v2), dir, conf).compacted)
     val seq = DeltaLog.listSeqs(spark, dir).last
@@ -402,13 +419,13 @@ class IncrementalSpec extends AnyFunSuite {
     restoreMeta(dir, staleMeta)
     assert(DeltaLog.listSeqs(spark, dir).isEmpty)
     assert(termDfs(dir) == before)
-    assert(DeltaLog.statsView(spark, dir) == statsBefore)
+    assert(DeltaLog.snapshot(spark, dir).stats == statsBefore)
 
     assert(Incremental.update(spark, df(v2), dir, conf).changed)
     assert(DeltaLog.listSeqs(spark, dir) == Seq(seq))
     assert(termDfs(dir) == termDfs(freshDir))
-    assert(DeltaLog.statsView(spark, dir) ==
-      DeltaLog.statsView(spark, freshDir))
+    assert(DeltaLog.snapshot(spark, dir).stats ==
+      DeltaLog.snapshot(spark, freshDir).stats)
   }
 
   test("a non-compacting commit writes only its delta dir and meta.json: " +
@@ -453,19 +470,19 @@ class IncrementalSpec extends AnyFunSuite {
     restoreMeta(dir, preFoldMeta)
     assert(DeltaLog.listSeqs(spark, dir) == seqs)
     assert(termDfs(dir) == termDfs(freshDir))
-    assert(DeltaLog.statsView(spark, dir) ==
-      DeltaLog.statsView(spark, freshDir))
+    assert(DeltaLog.snapshot(spark, dir).stats ==
+      DeltaLog.snapshot(spark, freshDir).stats)
     assert(flatLive(dir) == flatLive(freshDir))
   }
 
-  test("recover() rebuilds meta after a crash between terms swap and the " +
-      "meta refresh (no __v dirs left; detected by deltaSeq drift)") {
+  test("recover() rebuilds meta after a crash between the commit marker " +
+      "and the meta refresh (detected by deltaSeq drift)") {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_crash_meta_").toString
     IndexBuilder.build(spark, df(v1), dir, conf)
     Incremental.update(spark, df(v2), dir, conf)
     val good = IndexBuilder.readMeta(spark, dir)
-    // crash state: the commit and swap landed, meta did not
+    // crash state: the commit landed, meta did not
     IndexBuilder.updateMeta(spark, dir,
       Map("deltaSeq" -> "0", "docCount" -> "-1"))
     Incremental.recover(spark, dir)

@@ -227,12 +227,12 @@ class IndexEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(stats.docCount == oracle.docs.size.toLong)
     assert(stats.totalTokens == oracle.totalTokens)
     val termCount =
-      DeltaLog.termsView(spark, indexDir).count()
+      DeltaLog.snapshot(spark, indexDir).terms.count()
     assert(termCount == oracle.gtf.size.toLong)
   }
 
   test("df column equals oracle gtf for every term") {
-    val dfMap = DeltaLog.termsView(spark, indexDir)
+    val dfMap = DeltaLog.snapshot(spark, indexDir).terms
       .select($"term", $"df").as[(String, Long)].collect().toMap
     assert(dfMap.size == oracle.gtf.size)
     oracle.gtf.foreach { case (term, df) =>
@@ -444,7 +444,7 @@ class IndexEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Incremental.update(spark, spark.createDataset(v2).toDF(), dir,
       conf).changed)
     val h = IndexHandles(spark, dir)
-    assert(h.deltaSeqs.nonEmpty && h.tombMap.nonEmpty)
+    assert(h.snapshot.seqs.nonEmpty && h.tombMap.nonEmpty)
     assert(rows("extra", useWand = true).nonEmpty) // fills the new handle
     val (fresh, jobs) = jobsOf(rows("newword", useWand = true))
     assert(jobs == 0, s"first-seen query ran $jobs Spark jobs")

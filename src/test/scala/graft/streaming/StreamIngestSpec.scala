@@ -52,11 +52,12 @@ class StreamIngestSpec extends AnyFunSuite {
     // live views: micro-batch upserts commit merge-on-read deltas, so the
     // comparable state is base ∪ deltas with tombstone liveness applied
     def flat(d: String): Set[(String, String, Int, Int)] = {
-      val docs = graft.index.DeltaLog.docsView(spark, d)
+      val snap = graft.index.DeltaLog.snapshot(spark, d)
+      val docs = snap.docs
         .select($"docId", $"url")
-      val terms = graft.index.DeltaLog.termsView(spark, d)
+      val terms = snap.terms
         .select($"termId", $"term")
-      graft.index.DeltaLog.postingsView(spark, d)
+      snap.postings
         .join(docs, "docId").join(terms, "termId")
         .select($"url", $"term", $"tf", $"docLen")
         .as[(String, String, Int, Int)].collect().toSet
